@@ -303,7 +303,7 @@ def main() -> None:
     # pre-r12 scheme stay comparable
     detail["queries_warm"] = warm_timings
     detail["warm_total"] = round(sum(warm_timings.values()), 3)
-    # per-served-row {fold: [...], serve: s} from each row's best pass
+    # per-served-row {fold: [...], serve: s} from the cold (first) pass
     detail["fold_serve"] = fold_serve
     if scaling is not None:
         detail["scaling"] = scaling

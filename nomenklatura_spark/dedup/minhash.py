@@ -96,6 +96,10 @@ def lsh_candidate_pairs(
     pattern as the blocker's J1.  ``bands`` (a pre-materialized band
     relation) skips the banding groupBy — the incremental index
     checkpoints its batch bands once and passes them here."""
+    if signatures is None and bands is None:
+        raise ValueError(
+            "lsh_candidate_pairs: pass the signatures or the bands"
+        )
     banded = (
         banded_signatures(signatures, band_size) if bands is None else bands
     )

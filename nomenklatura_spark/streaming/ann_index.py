@@ -29,7 +29,6 @@ and ``bootstrap`` a fresh state.  The versioned-snapshot discipline
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
-from pyspark.sql.streaming import StreamingQuery
 
 from nomenklatura_spark.ann.ivf import ivf_assign, train_centroids
 from nomenklatura_spark.streaming.state import VersionedState
@@ -59,13 +58,25 @@ class VectorIndexState(VersionedState):
 
     # --- writes ------------------------------------------------------------
 
-    def _write(self, cells: DataFrame, codebook: DataFrame) -> None:
-        v = self.version() + 1
-        cells.write.mode("overwrite").partitionBy("centroid").parquet(
-            self._path("cells", v)
-        )
-        codebook.write.mode("overwrite").parquet(self._path("codebook", v))
-        self._bump(v)
+    def _write(
+        self,
+        cells: DataFrame,
+        codebook: DataFrame,
+        batch_id: int | None = None,
+        scope: str = "",
+    ) -> None:
+        # one task, in order: bootstrap's cells write caches the
+        # persisted codebook that the codebook write then reuses (see
+        # BlockingIndexState._write)
+        def _write_in_order(nv: int) -> None:
+            cells.write.mode("overwrite").partitionBy("centroid").parquet(
+                self._path("cells", nv)
+            )
+            codebook.write.mode("overwrite").parquet(
+                self._path("codebook", nv)
+            )
+
+        self.commit({}, (_write_in_order,), batch_id=batch_id, scope=scope)
 
     def bootstrap(
         self,
@@ -92,41 +103,24 @@ class VectorIndexState(VersionedState):
         vectors: DataFrame,
         id_col: str = "vec_id",
         vec_col: str = "embedding",
+        batch_id: int | None = None,
+        scope: str = "",
     ) -> None:
         """Fold one upsert batch in: assign against the FROZEN codebook
         (stateless broadcast argmax), replace touched ids."""
+        if self._replayed(batch_id, scope):
+            return
         assigned = ivf_assign(
             vectors, F.broadcast(self.codebook()), id_col, vec_col
         ).persist()
         touched = assigned.select("id").distinct()
         kept = self.cells().join(touched, "id", "left_anti")
-        self._write(kept.unionByName(assigned), self.codebook())
+        self._write(
+            kept.unionByName(assigned), self.codebook(), batch_id, scope
+        )
         assigned.unpersist()
 
     def retract(self, ids: DataFrame) -> None:
         """Remove vectors (one ``id`` column) from the index."""
         kept = self.cells().join(ids.select("id").distinct(), "id", "left_anti")
         self._write(kept, self.codebook())
-
-
-def maintain_vector_stream(
-    vectors_stream: DataFrame,
-    index: VectorIndexState,
-    checkpoint: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> StreamingQuery:
-    """Structured-Streaming driver: fold each micro-batch of vector
-    upserts into the IVF state via ``foreachBatch``."""
-
-    def _process(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        index.apply_batch(batch, id_col, vec_col)
-
-    return (
-        vectors_stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )

@@ -32,7 +32,6 @@ the merge a MERGE-on-w.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
-from pyspark.sql.streaming import StreamingQuery
 
 from nomenklatura_spark.dedup.bloom import (
     N_BITS,
@@ -41,10 +40,7 @@ from nomenklatura_spark.dedup.bloom import (
     densify_bloom,
     sparse_bloom_words,
 )
-from nomenklatura_spark.streaming.state import (
-    VersionedState,
-    start_maintenance_stream,
-)
+from nomenklatura_spark.streaming.state import VersionedState
 
 _WORDS_SCHEMA = "w int, v long"
 
@@ -81,7 +77,7 @@ class BloomIndexState(VersionedState):
         """OR one micro-batch of new benchmark items into the filter.
         The guard against redelivered batch ids only avoids a no-op
         snapshot — OR-merging the same batch twice is exact."""
-        if batch_id is not None and batch_id <= self.last_batch(scope):
+        if self._replayed(batch_id, scope):
             return
         batch_words = sparse_bloom_words(
             bench, id_col, text_col, self.k, self.mode, self.n_bits, self.n_hashes
@@ -92,12 +88,7 @@ class BloomIndexState(VersionedState):
             .groupBy("w")
             .agg(F.bit_or("v").alias("v"))
         )
-        nv = self.version() + 1
-        merged.write.mode("overwrite").parquet(self._path("words", nv))
-        if batch_id is None:
-            self._bump(nv)
-        else:
-            self._bump(nv, batch_id, scope)
+        self.commit({"words": merged}, batch_id=batch_id, scope=scope)
 
     def bloom(self, version: int | None = None) -> DataFrame:
         """The one-row dense broadcast form of the maintained filter."""
@@ -124,21 +115,3 @@ class BloomIndexState(VersionedState):
             self.n_hashes,
             decimals,
         )
-
-
-def maintain_bloom_stream(
-    stream: DataFrame,
-    state: BloomIndexState,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    checkpoint_dir: str | None = None,
-    trigger_once: bool = False,
-) -> StreamingQuery:
-    """Structured Streaming driver: each micro-batch of benchmark items
-    is OR-merged into the filter via ``foreachBatch``."""
-    scope = checkpoint_dir or ""
-
-    def _process(batch: DataFrame, batch_id: int) -> None:
-        state.apply_batch(batch, id_col, text_col, batch_id=batch_id, scope=scope)
-
-    return start_maintenance_stream(stream, _process, checkpoint_dir, trigger_once)

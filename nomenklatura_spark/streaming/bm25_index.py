@@ -46,13 +46,9 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, functions as F
-from pyspark.sql.streaming import StreamingQuery
 
 from nomenklatura_spark.dedup.ngram import normalize_for_shingles
-from nomenklatura_spark.streaming.state import (
-    VersionedState,
-    start_maintenance_stream,
-)
+from nomenklatura_spark.streaming.state import VersionedState
 from nomenklatura_spark.textops.retrieval import (
     _doc_terms,
     _score_from_tf,
@@ -104,7 +100,7 @@ class Bm25IndexState(VersionedState):
         (dynamic overwrite — self-healing under redelivery) and merge
         the corpus counters; skip redelivered batch ids (additive state,
         vocab-index replay rule)."""
-        if batch_id is not None and batch_id <= self.last_batch(scope):
+        if self._replayed(batch_id, scope):
             return
         terms = _doc_terms(docs, id_col, text_col, "id")
         batch_postings = (
@@ -130,19 +126,20 @@ class Bm25IndexState(VersionedState):
                 F.sum("sum_dl").alias("sum_dl"),
             )
         )
-        nv = self.version() + 1
-        (
-            batch_postings.withColumn("batch", F.lit(nv))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch", "wb")
-            .parquet(self._postings_root)
+
+        def _append_postings(nv: int) -> None:
+            (
+                batch_postings.withColumn("batch", F.lit(nv))
+                .write.mode("overwrite")
+                .option("partitionOverwriteMode", "dynamic")
+                .partitionBy("batch", "wb")
+                .parquet(self._postings_root)
+            )
+
+        self.commit(
+            {"counters": merged}, (_append_postings,),
+            batch_id=batch_id, scope=scope,
         )
-        merged.write.mode("overwrite").parquet(self._path("counters", nv))
-        if batch_id is None:
-            self._bump(nv)
-        else:
-            self._bump(nv, batch_id, scope)
 
     def topk(
         self,
@@ -188,23 +185,3 @@ class Bm25IndexState(VersionedState):
         return _score_from_tf(
             tf, qt, df_tbl, stats, "doc_id", k, k1, b, exclude_self
         )
-
-
-def maintain_bm25_stream(
-    stream: DataFrame,
-    state: Bm25IndexState,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    checkpoint_dir: str | None = None,
-    trigger_once: bool = False,
-) -> StreamingQuery:
-    """Structured Streaming driver: each micro-batch appends its posting
-    rollup and merges the counters via ``foreachBatch``; the replay
-    guard is scoped to the checkpoint dir (batch numbering restarts per
-    checkpoint)."""
-    scope = checkpoint_dir or ""
-
-    def _process(batch: DataFrame, batch_id: int) -> None:
-        state.apply_batch(batch, id_col, text_col, batch_id=batch_id, scope=scope)
-
-    return start_maintenance_stream(stream, _process, checkpoint_dir, trigger_once)

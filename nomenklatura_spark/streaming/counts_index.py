@@ -31,12 +31,8 @@ on a cluster the merge is a Delta MERGE on (k, b) with
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
-from pyspark.sql.streaming import StreamingQuery
 
-from nomenklatura_spark.streaming.state import (
-    VersionedState,
-    start_maintenance_stream,
-)
+from nomenklatura_spark.streaming.state import VersionedState
 
 _COUNTS_SCHEMA = "k string, b timestamp, cnt bigint, sv bigint"
 
@@ -65,7 +61,7 @@ class CountsIndexState(VersionedState):
         full-outer merge with state summing both counters.
         ``value_col`` must be an additive INTEGER column (quantize
         upstream); None maintains counts only."""
-        if batch_id is not None and batch_id <= self.last_batch(scope):
+        if self._replayed(batch_id, scope):
             return self.spark.createDataFrame([], _COUNTS_SCHEMA)
         val = (
             F.col(value_col).cast("bigint")
@@ -90,15 +86,7 @@ class CountsIndexState(VersionedState):
             # (cnt = 0 + batch cnt; sv keeps the batch's NULL-ness) —
             # write the rollup itself and keep the first fold's plan
             # free of the dead empty-side join
-            merged = batch
-            nv = self.version() + 1
-            merged.write.mode("overwrite").parquet(
-                self._path("counts", nv)
-            )
-            if batch_id is None:
-                self._bump(nv)
-            else:
-                self._bump(nv, batch_id, scope)
+            self.commit({"counts": batch}, batch_id=batch_id, scope=scope)
             return batch
         merged = (
             self.counts()
@@ -140,37 +128,5 @@ class CountsIndexState(VersionedState):
                 .alias("sv"),
             )
         )
-        nv = self.version() + 1
-        merged.write.mode("overwrite").parquet(self._path("counts", nv))
-        if batch_id is None:
-            self._bump(nv)
-        else:
-            self._bump(nv, batch_id, scope)
+        self.commit({"counts": merged}, batch_id=batch_id, scope=scope)
         return batch
-
-def maintain_counts_stream(
-    stream: DataFrame,
-    state: CountsIndexState,
-    key_col: str = "event_type",
-    ts_col: str = "ts",
-    value_col: str | None = None,
-    checkpoint_dir: str | None = None,
-    trigger_once: bool = False,
-) -> StreamingQuery:
-    """Structured Streaming driver: each micro-batch folds its rollup
-    into the counter view via ``foreachBatch``."""
-    scope = checkpoint_dir or ""
-
-    def _process(batch: DataFrame, batch_id: int) -> None:
-        state.apply_batch(
-            batch,
-            key_col,
-            ts_col,
-            value_col,
-            batch_id=batch_id,
-            scope=scope,
-        )
-
-    return start_maintenance_stream(
-        stream, _process, checkpoint_dir, trigger_once
-    )

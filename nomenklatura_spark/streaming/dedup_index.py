@@ -69,11 +69,11 @@ Delta MERGE's copy-on-write file reuse.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
-from pyspark.sql.streaming import StreamingQuery
 
 from nomenklatura_spark.streaming.state import (
+    Bucketed,
     VersionedState,
-    start_maintenance_stream,
+    run_concurrently,
 )
 from nomenklatura_spark.dedup.minhash import minhash_similarity
 
@@ -137,8 +137,14 @@ class DedupIndexState(VersionedState):
             **kwargs,
         )
 
-    def apply_batch(self, docs: DataFrame, id_col: str = "doc_id",
-                    text_col: str = "text") -> DataFrame:
+    def apply_batch(
+        self,
+        docs: DataFrame,
+        id_col: str = "doc_id",
+        text_col: str = "text",
+        batch_id: int | None = None,
+        scope: str = "",
+    ) -> DataFrame:
         """Fold one micro-batch of documents into the index; returns the
         near-dup pairs this batch surfaced (within-batch + vs state).
 
@@ -154,9 +160,10 @@ class DedupIndexState(VersionedState):
         local analog of Delta MERGE's copy-on-write).  Only a fold that
         retracts rows (changed-content / unchanged re-ingest) rewrites
         buckets, and only the buckets holding the retracted keys."""
-        from concurrent.futures import ThreadPoolExecutor
-
         from nomenklatura_spark.dedup.minhash import minhash_signatures
+
+        if self._replayed(batch_id, scope):
+            return self.spark.createDataFrame([], _PAIR_SCHEMA)
 
         batch_sigs = minhash_signatures(
             docs, id_col, text_col, self.k, self.mode, self.n_hashes
@@ -179,38 +186,37 @@ class DedupIndexState(VersionedState):
         # changed probe AND names the buckets the bucketed writes must
         # rewrite.
         first = self.version() < 0
-        changed = None
-        has_changed = False
-        has_overlap = False
-        touched_state = None
+
+        def _probe() -> tuple:
+            """(touched_state, has_overlap, changed, has_changed)"""
+            if first:
+                return None, False, None, False
+            touched_state = state_sigs.join(
+                touched, "id", "semi"
+            ).localCheckpoint()
+            if touched_state.isEmpty():
+                return touched_state, False, None, False
+            sig_vec = F.sort_array(
+                F.collect_list(F.struct("seed", "minhash"))
+            )
+            changed = (
+                touched_state.groupBy("id")
+                .agg(sig_vec.alias("_old"))
+                .join(
+                    batch_sigs.groupBy("id").agg(sig_vec.alias("_new")),
+                    "id",
+                )
+                .where(~F.col("_old").eqNullSafe(F.col("_new")))
+                .select("id")
+            )
+            if changed.isEmpty():
+                return touched_state, True, changed, False
+            return touched_state, True, changed.localCheckpoint(), True
+
         bands_plan = _bands_of(batch_sigs, self.band_size)
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            f_bands = pool.submit(bands_plan.localCheckpoint)
-            if not first:
-                touched_state = state_sigs.join(
-                    touched, "id", "semi"
-                ).localCheckpoint()
-                has_overlap = not touched_state.isEmpty()
-                if has_overlap:
-                    sig_vec = F.sort_array(
-                        F.collect_list(F.struct("seed", "minhash"))
-                    )
-                    changed = (
-                        touched_state.groupBy("id")
-                        .agg(sig_vec.alias("_old"))
-                        .join(
-                            batch_sigs.groupBy("id").agg(
-                                sig_vec.alias("_new")
-                            ),
-                            "id",
-                        )
-                        .where(~F.col("_old").eqNullSafe(F.col("_new")))
-                        .select("id")
-                    )
-                    has_changed = not changed.isEmpty()
-                    if has_changed:
-                        changed = changed.localCheckpoint()
-            batch_bands = f_bands.result()
+        batch_bands, (touched_state, has_overlap, changed, has_changed) = (
+            run_concurrently(bands_plan.localCheckpoint, _probe)
+        )
 
         # within-batch candidates: lsh_candidate_pairs over the one
         # checkpointed band pass (ADVICE r11: the batch path's own
@@ -264,8 +270,6 @@ class DedupIndexState(VersionedState):
         # Bucketed write plans: ``*_data`` is what the fold actually
         # writes, ``rb_*`` the buckets it rewrites (None = write all /
         # carry nothing, [] = pure append — every old bucket hardlinks).
-        v = self.version()
-        nv = v + 1
         live_pairs = None
         if first or not has_overlap:
             # bootstrap, or the steady-state append-only fold: no state
@@ -380,10 +384,10 @@ class DedupIndexState(VersionedState):
         )
 
         # the three bucketed data writes are independent of the
-        # component fold — run them beside it (§2.6); the component
-        # write chains after its fold inside the same worker, so the
-        # fold wall is max(writes, CC + comps write), not the sum
-        def _fold_and_write_comps() -> None:
+        # component fold — ``commit`` runs them beside it (§2.6); the
+        # component write chains after its fold inside the same worker,
+        # so the fold wall is max(writes, CC + comps write), not the sum
+        def _fold_comps() -> DataFrame:
             if first:
                 # empty previous mapping: the star union is empty, so
                 # the merge fold IS plain CC over the new pairs
@@ -391,39 +395,26 @@ class DedupIndexState(VersionedState):
                     connected_components,
                 )
 
-                merged_comps = connected_components(
+                return connected_components(
                     new_pairs.select("lid", "rid"), src="lid", dst="rid"
                 )
-            else:
-                merged_comps = fold_components_incremental(
-                    self.components(),
-                    new_pairs,
-                    merged_pairs=live_pairs,
-                    changed=changed if has_changed else None,
-                )
-            merged_comps.write.mode("overwrite").parquet(
-                self._path("components", nv)
+            return fold_components_incremental(
+                self.components(),
+                new_pairs,
+                merged_pairs=live_pairs,
+                changed=changed if has_changed else None,
             )
 
-        with ThreadPoolExecutor(max_workers=4) as pool:
-            futs = [
-                pool.submit(
-                    self._write_bucketed, "signatures", nv, sig_data,
-                    "id", rb_ids,
-                ),
-                pool.submit(
-                    self._write_bucketed, "bands", nv, band_data,
-                    "id", rb_ids,
-                ),
-                pool.submit(
-                    self._write_bucketed, "pairs", nv, pair_data,
-                    "lid", rb_pairs,
-                ),
-                pool.submit(_fold_and_write_comps),
-            ]
-            for f in futs:
-                f.result()
-        self._bump(nv)
+        self.commit(
+            {
+                "signatures": Bucketed(sig_data, "id", rb_ids),
+                "bands": Bucketed(band_data, "id", rb_ids),
+                "pairs": Bucketed(pair_data, "lid", rb_pairs),
+                "components": _fold_comps,
+            },
+            batch_id=batch_id,
+            scope=scope,
+        )
         return new_pairs
 
     def delete(self, ids: DataFrame) -> None:
@@ -452,8 +443,6 @@ class DedupIndexState(VersionedState):
         )
         if gone.isEmpty():
             return
-        v = self.version()
-        nv = v + 1
         # bucketed retraction: only the buckets holding a deleted id's
         # rows are rewritten (partition-pruned read of just those);
         # every other bucket hardlinks from v{N-1} (``_write_bucketed``)
@@ -511,50 +500,9 @@ class DedupIndexState(VersionedState):
             merged_pairs=live_pairs,
             changed=gone,
         )
-        self._write_bucketed("signatures", nv, sig_data, "id", rb_ids)
-        self._write_bucketed("bands", nv, band_data, "id", rb_ids)
-        self._write_bucketed("pairs", nv, pair_data, "lid", rb_pairs)
-        merged_comps.write.mode("overwrite").parquet(
-            self._path("components", nv)
-        )
-        self._bump(nv)
-
-
-def maintain_dedup_stream(
-    stream: DataFrame,
-    state: DedupIndexState,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    checkpoint_dir: str | None = None,
-    trigger_once: bool = False,
-    tombstone_col: str | None = None,
-) -> StreamingQuery:
-    """Structured Streaming driver: each micro-batch of documents folds
-    into the dedup index via ``foreachBatch`` (the merge is a multi-table
-    transaction, which sinks can't express).  Replay-idempotent by
-    construction (upsert-by-document + max-merged pair log; deletes are
-    absent-id no-ops), so no batch guard is needed.  ``trigger_once``
-    drains the backlog and terminates (availableNow), for cron-style
-    catch-up runs.
-
-    ``tombstone_col`` names an optional boolean column for CDC-shaped
-    feeds: rows where it is true DELETE their id from the index
-    (``DedupIndexState.delete`` — the G10 deletion path), other rows
-    upsert as usual.  Within one micro-batch tombstones win over
-    upserts of the same id (the delete folds after the upsert), so a
-    batch that both rewrites and tombstones a document resolves to
-    deleted — the deterministic reading of an intra-batch conflict."""
-
-    def _process(batch: DataFrame, batch_id: int) -> None:
-        if tombstone_col is None:
-            state.apply_batch(batch, id_col, text_col)
-            return
-        dead = batch.where(F.col(tombstone_col)).select(id_col)
-        live = batch.where(
-            ~F.coalesce(F.col(tombstone_col), F.lit(False))
-        )
-        if not live.isEmpty():
-            state.apply_batch(live, id_col, text_col)
-        state.delete(dead)
-
-    return start_maintenance_stream(stream, _process, checkpoint_dir, trigger_once)
+        self.commit({
+            "signatures": Bucketed(sig_data, "id", rb_ids),
+            "bands": Bucketed(band_data, "id", rb_ids),
+            "pairs": Bucketed(pair_data, "lid", rb_pairs),
+            "components": merged_comps,
+        })

@@ -80,12 +80,8 @@ on (u, step, t) plus a partition-overwrite of the pruned tail.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
-from pyspark.sql.streaming import StreamingQuery
 
-from nomenklatura_spark.streaming.state import (
-    VersionedState,
-    start_maintenance_stream,
-)
+from nomenklatura_spark.streaming.state import VersionedState
 
 _TIMES_SCHEMA = "u string, step int, t timestamp, d timestamp"
 
@@ -156,7 +152,7 @@ class FunnelIndexState(VersionedState):
         state: distinct-union, re-derive the q chain, re-prune, then cap
         orphan tails (see module docstring) — exact or a loud ValueError,
         never silently wrong."""
-        if batch_id is not None and batch_id <= self.last_batch(scope):
+        if self._replayed(batch_id, scope):
             return self.spark.createDataFrame([], _TIMES_SCHEMA)
         batch = self._route(df, user_col, ts_col, type_col)
         bootstrap = self.version() < 0
@@ -238,27 +234,16 @@ class FunnelIndexState(VersionedState):
         pruned, bad_plan = self._cap_orphans(
             pruned, q, prev_markers, disc_upd, k, qarr
         )
-        nv = self.version() + 1
         # the decidability probe and the snapshot write are independent
-        # reads of the same checkpointed fold relations — overlap them
-        # (guide §2.6); an undecidable fold still raises BEFORE the
-        # pointer bump, so no state commits (``_raise_undecidable``)
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            f_bad = pool.submit(bad_plan.collect)
-            f_write = pool.submit(
-                lambda: pruned.write.mode("overwrite").parquet(
-                    self._path("times", nv)
-                )
-            )
-            bad = f_bad.result()
-            f_write.result()
-        self._raise_undecidable(bad)
-        if batch_id is None:
-            self._bump(nv)
-        else:
-            self._bump(nv, batch_id, scope)
+        # reads of the same checkpointed fold relations — ``commit``
+        # overlaps them (guide §2.6); an undecidable fold still raises
+        # BEFORE the pointer swap, so no state commits
+        self.commit(
+            {"times": pruned},
+            (lambda nv: self._raise_undecidable(bad_plan.collect()),),
+            batch_id=batch_id,
+            scope=scope,
+        )
         return batch
 
     def _route(
@@ -374,10 +359,7 @@ class FunnelIndexState(VersionedState):
         # probe still runs — a broken invariant must stay loud
         self._raise_undecidable(bad_plan.collect())
         untouched = prev.where(~F.col("u").isin(users))
-        out = untouched.unionByName(rebuilt)
-        nv = self.version() + 1
-        out.write.mode("overwrite").parquet(self._path("times", nv))
-        self._bump(nv)
+        self.commit({"times": untouched.unionByName(rebuilt)})
         return users
 
     def _cap_orphans(
@@ -501,11 +483,10 @@ class FunnelIndexState(VersionedState):
 
     def _raise_undecidable(self, bad: list) -> None:
         """The exact-or-loud raise for ``_cap_orphans``'s decidability
-        probe.  Callers run the probe's collect and the snapshot write
-        CONCURRENTLY (the write is uncommitted until ``_bump``, so an
-        undecidable fold still raises before any state becomes
-        visible — the crash-safe pointer swap already tolerates laid-
-        down-but-unreferenced ``v{N}`` files)."""
+        probe.  ``apply_batch`` runs the probe's collect as a ``commit``
+        task beside the snapshot write (the write is uncommitted until
+        the pointer swap, so an undecidable fold still raises before any
+        state becomes visible)."""
         if not bad:
             return
         cap = self.max_orphan_times
@@ -542,26 +523,3 @@ class FunnelIndexState(VersionedState):
         for c in rows[1:]:
             out = out.unionByName(c)
         return finalize_funnel_counts(out)
-
-
-def maintain_funnel_stream(
-    stream: DataFrame,
-    state: FunnelIndexState,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    type_col: str = "event_type",
-    checkpoint_dir: str | None = None,
-    trigger_once: bool = False,
-) -> StreamingQuery:
-    """Structured Streaming driver: each micro-batch folds its events
-    into the funnel state via ``foreachBatch``."""
-    scope = checkpoint_dir or ""
-
-    def _process(batch: DataFrame, batch_id: int) -> None:
-        state.apply_batch(
-            batch, user_col, ts_col, type_col, batch_id=batch_id, scope=scope
-        )
-
-    return start_maintenance_stream(
-        stream, _process, checkpoint_dir, trigger_once
-    )

@@ -22,13 +22,9 @@ greatest(t.reg, s.reg)`` on (key, bucket).
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
-from pyspark.sql.streaming import StreamingQuery
 
 from nomenklatura_spark.operators.sketch import hll_estimate, hll_registers
-from nomenklatura_spark.streaming.state import (
-    VersionedState,
-    start_maintenance_stream,
-)
+from nomenklatura_spark.streaming.state import VersionedState
 
 _HLL_SCHEMA = "key string, bucket int, reg int"
 
@@ -65,7 +61,7 @@ class HllIndexState(VersionedState):
         The batch-id guard is honored when supplied, but a redelivered
         batch that slips past it is absorbed by idempotence — max-merge
         of already-seen registers changes nothing."""
-        if batch_id is not None and batch_id <= self.last_batch(scope):
+        if self._replayed(batch_id, scope):
             return self.spark.createDataFrame([], _HLL_SCHEMA)
         batch = hll_registers(
             df.select(F.col(key_col).cast("string").alias("key"), value_col),
@@ -87,28 +83,5 @@ class HllIndexState(VersionedState):
                 .groupBy("key", "bucket")
                 .agg(F.max("reg").alias("reg"))
             )
-        nv = self.version() + 1
-        merged.write.mode("overwrite").parquet(self._path("registers", nv))
-        if batch_id is None:
-            self._bump(nv)
-        else:
-            self._bump(nv, batch_id, scope)
+        self.commit({"registers": merged}, batch_id=batch_id, scope=scope)
         return batch
-
-
-def maintain_hll_stream(
-    stream: DataFrame,
-    state: HllIndexState,
-    key_col: str,
-    value_col: str,
-    checkpoint_dir: str | None = None,
-    trigger_once: bool = False,
-) -> StreamingQuery:
-    """Structured Streaming driver: each micro-batch folds its registers
-    into the sketch via ``foreachBatch``."""
-    scope = checkpoint_dir or ""
-
-    def _process(batch: DataFrame, batch_id: int) -> None:
-        state.apply_batch(batch, key_col, value_col, batch_id=batch_id, scope=scope)
-
-    return start_maintenance_stream(stream, _process, checkpoint_dir, trigger_once)

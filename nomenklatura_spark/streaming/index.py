@@ -31,7 +31,6 @@ delta computation itself is identical.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
-from pyspark.sql.streaming import StreamingQuery
 
 from nomenklatura_spark.functions.tokenize import tokenize_statements
 from nomenklatura_spark.operators.blocker import token_entries, token_schema_counts
@@ -56,15 +55,27 @@ class BlockingIndexState(VersionedState):
 
     # --- writes ------------------------------------------------------------
 
-    def _write(self, entries: DataFrame, tsc: DataFrame) -> None:
-        v = self.version() + 1
-        entries.write.mode("overwrite").parquet(self._path("entries", v))
-        tsc.select(
+    def _write(
+        self,
+        entries: DataFrame,
+        tsc: DataFrame,
+        batch_id: int | None = None,
+        scope: str = "",
+    ) -> None:
+        tsc = tsc.select(
             "token", "schema", "field",
             F.col("df").cast("bigint").alias("df"),
             F.col("freq").cast("bigint").alias("freq"),
-        ).write.mode("overwrite").parquet(self._path("tsc", v))
-        self._bump(v)
+        )
+
+        # one task, in order: the tsc write reuses the batch entries
+        # that the entries write caches; side by side, both writes
+        # would materialize the cache (measured: 16 -> 19 fold jobs)
+        def _write_in_order(nv: int) -> None:
+            entries.write.mode("overwrite").parquet(self._path("entries", nv))
+            tsc.write.mode("overwrite").parquet(self._path("tsc", nv))
+
+        self.commit({}, (_write_in_order,), batch_id=batch_id, scope=scope)
 
     def bootstrap(self, statements: DataFrame) -> None:
         """Full build from a statement corpus (the batch path, T1+T2+A1)."""
@@ -72,7 +83,12 @@ class BlockingIndexState(VersionedState):
         self._write(entries, token_schema_counts(entries))
         entries.unpersist()
 
-    def apply_batch(self, statements: DataFrame) -> None:
+    def apply_batch(
+        self,
+        statements: DataFrame,
+        batch_id: int | None = None,
+        scope: str = "",
+    ) -> None:
         """Fold one upsert batch into the index.
 
         ``statements`` must carry the complete current statements of every
@@ -81,9 +97,11 @@ class BlockingIndexState(VersionedState):
         with an empty statement set is not expressible in a flat statement
         frame — use ``retract_entities`` for that.
         """
+        if self._replayed(batch_id, scope):
+            return
         new_entries = token_entries(tokenize_statements(statements)).persist()
         touched = new_entries.select("id").distinct()
-        self._merge(new_entries, touched)
+        self._merge(new_entries, touched, batch_id, scope)
         new_entries.unpersist()
 
     def retract_entities(self, entity_ids: DataFrame) -> None:
@@ -91,7 +109,13 @@ class BlockingIndexState(VersionedState):
         empty = self.spark.createDataFrame([], _ENTRIES_SCHEMA)
         self._merge(empty, entity_ids.select("id").distinct())
 
-    def _merge(self, new_entries: DataFrame, touched: DataFrame) -> None:
+    def _merge(
+        self,
+        new_entries: DataFrame,
+        touched: DataFrame,
+        batch_id: int | None = None,
+        scope: str = "",
+    ) -> None:
         old_entries = self.entries()
         retracted = old_entries.join(touched, "id", "semi")
         kept = old_entries.join(touched, "id", "left_anti")
@@ -130,26 +154,4 @@ class BlockingIndexState(VersionedState):
             )
             .where(F.col("df") > 0)
         )
-        self._write(entries2, tsc2)
-
-
-def maintain_index_stream(
-    statements_stream: DataFrame,
-    index: BlockingIndexState,
-    checkpoint: str,
-) -> StreamingQuery:
-    """Structured-Streaming driver: fold each micro-batch of statement
-    upserts into the index via ``foreachBatch`` (the blocking-index
-    analogue of P4's apply_stream)."""
-
-    def _process(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        index.apply_batch(batch)
-
-    return (
-        statements_stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+        self._write(entries2, tsc2, batch_id, scope)

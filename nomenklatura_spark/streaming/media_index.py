@@ -44,8 +44,8 @@ maintained by key:
 Replay-idempotent by construction (upsert-by-asset + distinct-merged
 pair log + component fold keyed on signature CHANGE: refolding a batch
 finds every signature already in state, so the retraction path stands
-down and the regenerated pairs are the logged ones), so no batch guard
-is needed.
+down and the regenerated pairs are the logged ones), so the batch guard
+only spares a no-op snapshot.
 State is versioned parquet snapshots behind the shared VERSION pointer
 (crash-safe swap, time travel); on a cluster each relation is a Delta
 MERGE and the pairs log an append-only table.  Since r12 the signature
@@ -69,7 +69,6 @@ full-scan repair verb after tightening ``max_bucket``).
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
-from pyspark.sql.streaming import StreamingQuery
 
 from nomenklatura_spark.multimodal.dhash import (
     _banded,
@@ -80,8 +79,9 @@ from nomenklatura_spark.multimodal.dhash import (
     full_bucket_scan,
 )
 from nomenklatura_spark.streaming.state import (
+    Bucketed,
     VersionedState,
-    start_maintenance_stream,
+    run_concurrently,
 )
 
 _SIG_SCHEMA = "id long, blocks array<int>, dhash string"
@@ -146,6 +146,8 @@ class MediaDedupIndexState(VersionedState):
         assets: DataFrame,
         id_col: str = "asset_id",
         payload_col: str = "payload",
+        batch_id: int | None = None,
+        scope: str = "",
     ) -> DataFrame:
         """Fold one micro-batch of media assets into the index; returns
         the near-dup pairs this batch surfaced (within-batch + vs
@@ -162,8 +164,8 @@ class MediaDedupIndexState(VersionedState):
         overlap on a small pool (§2.6): the overlap probe runs beside
         the batch-side histogram delta, and the changed-id probe beside
         the merged-histogram checkpoint."""
-        from concurrent.futures import ThreadPoolExecutor
-
+        if self._replayed(batch_id, scope):
+            return self.spark.createDataFrame([], _PAIR_SCHEMA)
         # grid_h derives from n_blocks so the signatures this index
         # builds always match the n_blocks its dhash_pairs calls band —
         # a mismatch would explode to sentinel bands and raise there
@@ -197,14 +199,13 @@ class MediaDedupIndexState(VersionedState):
             # without the retraction leg — the steady-state fold has no
             # overlap, so that delta is final; a re-ingest fold rebuilds
             # it with the touched ids' old bands retracted.
-            with ThreadPoolExecutor(max_workers=2) as pool:
-                f_touched = pool.submit(
-                    state_sigs.join(touched, "id", "semi").localCheckpoint
-                )
-                f_delta = pool.submit(batch_counts.localCheckpoint)
-                touched_state = f_touched.result()
-                overlap = not touched_state.isEmpty()
-                delta = f_delta.result()
+            def _overlap_probe() -> tuple:
+                ts = state_sigs.join(touched, "id", "semi").localCheckpoint()
+                return ts, not ts.isEmpty()
+
+            (touched_state, overlap), delta = run_concurrently(
+                _overlap_probe, batch_counts.localCheckpoint
+            )
             if overlap:
                 # retraction leg: counts only change through buckets
                 # the batch touches, so the delta stays batch-sized
@@ -244,31 +245,31 @@ class MediaDedupIndexState(VersionedState):
             merged_counts_plan = prev_counts.join(
                 delta_keys, ["band_no", "band_val"], "left_anti"
             ).unionByName(updated)
-            with ThreadPoolExecutor(max_workers=2) as pool:
-                f_counts = pool.submit(merged_counts_plan.localCheckpoint)
-                if overlap:
-                    # split case (module docstring): ids re-ingested
-                    # with a CHANGED signature must retract their stale
-                    # pairs — unchanged re-ingest re-derives identical
-                    # pairs, so the retraction stands down and the fold
-                    # stays merge-only (touched-sized join, tiny)
-                    changed = (
-                        touched_state.select(
-                            "id", F.col("dhash").alias("_old")
-                        )
-                        .join(
-                            batch_sigs.select(
-                                "id", F.col("dhash").alias("_new")
-                            ),
-                            "id",
-                        )
-                        .where(~F.col("_old").eqNullSafe(F.col("_new")))
-                        .select("id")
+            def _changed_probe() -> tuple:
+                """(changed, has_changed)"""
+                if not overlap:
+                    return None, False
+                # split case (module docstring): ids re-ingested with a
+                # CHANGED signature must retract their stale pairs —
+                # unchanged re-ingest re-derives identical pairs, so the
+                # retraction stands down and the fold stays merge-only
+                # (touched-sized join, tiny)
+                changed = (
+                    touched_state.select("id", F.col("dhash").alias("_old"))
+                    .join(
+                        batch_sigs.select("id", F.col("dhash").alias("_new")),
+                        "id",
                     )
-                    has_changed = not changed.isEmpty()
-                    if has_changed:
-                        changed = changed.localCheckpoint()
-                merged_counts = f_counts.result()
+                    .where(~F.col("_old").eqNullSafe(F.col("_new")))
+                    .select("id")
+                )
+                if changed.isEmpty():
+                    return changed, False
+                return changed.localCheckpoint(), True
+
+            merged_counts, (changed, has_changed) = run_concurrently(
+                merged_counts_plan.localCheckpoint, _changed_probe
+            )
             # the probe join's state side: a PLAN over the state
             # parquet + the batch checkpoint — never materialized (r12;
             # its only consumer is the one banded join below, and the
@@ -297,8 +298,6 @@ class MediaDedupIndexState(VersionedState):
         # endpoint not in state, so it cannot collide with a logged
         # pair; dhash_pairs output is (lid, rid)-unique); a re-ingest
         # fold rewrites only the buckets holding retracted rows
-        v = self.version()
-        nv = v + 1
         live_pairs = None
         if first or not overlap:
             rb_ids: list[int] | None = None if first else []
@@ -389,14 +388,11 @@ class MediaDedupIndexState(VersionedState):
             fold_components_incremental,
         )
 
-        # the data writes are independent of the component fold — run
-        # them beside it (§2.6); the component write chains after its
-        # fold in the same worker, so the fold wall is
+        # the data writes are independent of the component fold —
+        # ``commit`` runs them beside it (§2.6); the component write
+        # chains after its fold in the same worker, so the fold wall is
         # max(writes, CC + comps write), not the sum
-        def _write(df: DataFrame, rel: str) -> None:
-            df.write.mode("overwrite").parquet(self._path(rel, nv))
-
-        def _fold_and_write_comps() -> None:
+        def _fold_comps() -> DataFrame:
             if first:
                 # empty previous mapping: the star union is empty, so
                 # the merge fold IS plain CC over the new pairs
@@ -404,34 +400,26 @@ class MediaDedupIndexState(VersionedState):
                     connected_components,
                 )
 
-                merged_comps = connected_components(
+                return connected_components(
                     new_pairs.select("lid", "rid"), src="lid", dst="rid"
                 )
-            else:
-                merged_comps = fold_components_incremental(
-                    self.components(),
-                    new_pairs,
-                    merged_pairs=live_pairs,
-                    changed=changed if has_changed else None,
-                )
-            _write(merged_comps, "components")
+            return fold_components_incremental(
+                self.components(),
+                new_pairs,
+                merged_pairs=live_pairs,
+                changed=changed if has_changed else None,
+            )
 
-        with ThreadPoolExecutor(max_workers=4) as pool:
-            futs = [
-                pool.submit(
-                    self._write_bucketed, "signatures", nv, sig_data,
-                    "id", rb_ids,
-                ),
-                pool.submit(
-                    self._write_bucketed, "pairs", nv, pair_data,
-                    "lid", rb_pairs,
-                ),
-                pool.submit(_write, merged_counts, "band_counts"),
-                pool.submit(_fold_and_write_comps),
-            ]
-            for f in futs:
-                f.result()
-        self._bump(nv)
+        self.commit(
+            {
+                "signatures": Bucketed(sig_data, "id", rb_ids),
+                "pairs": Bucketed(pair_data, "lid", rb_pairs),
+                "band_counts": merged_counts,
+                "components": _fold_comps,
+            },
+            batch_id=batch_id,
+            scope=scope,
+        )
         return new_pairs
 
     def delete(self, ids: DataFrame) -> None:
@@ -457,8 +445,6 @@ class MediaDedupIndexState(VersionedState):
         )
         if gone.isEmpty():
             return
-        v = self.version()
-        nv = v + 1
         state_sigs = self.signatures()
         gone_counts = band_bucket_counts(
             state_sigs.join(gone, "id", "semi"),
@@ -533,15 +519,12 @@ class MediaDedupIndexState(VersionedState):
             merged_pairs=live_pairs,
             changed=gone,
         )
-        self._write_bucketed("signatures", nv, sig_data, "id", rb_ids)
-        self._write_bucketed("pairs", nv, pair_data, "lid", rb_pairs)
-        merged_comps.write.mode("overwrite").parquet(
-            self._path("components", nv)
-        )
-        merged_counts.write.mode("overwrite").parquet(
-            self._path("band_counts", nv)
-        )
-        self._bump(nv)
+        self.commit({
+            "signatures": Bucketed(sig_data, "id", rb_ids),
+            "pairs": Bucketed(pair_data, "lid", rb_pairs),
+            "components": merged_comps,
+            "band_counts": merged_counts,
+        })
 
     def serve_keep_list(self) -> DataFrame:
         """(asset_id, keep) from state alone: one deterministic keeper
@@ -554,38 +537,3 @@ class MediaDedupIndexState(VersionedState):
             F.col("node").alias("asset_id"),
             (F.col("node") == F.col("component")).alias("keep"),
         )
-
-
-def maintain_media_dedup_stream(
-    stream: DataFrame,
-    state: MediaDedupIndexState,
-    id_col: str = "asset_id",
-    payload_col: str = "payload",
-    checkpoint_dir: str | None = None,
-    trigger_once: bool = False,
-    tombstone_col: str | None = None,
-) -> StreamingQuery:
-    """Structured Streaming driver: each micro-batch of assets folds
-    into the media dedup index via ``foreachBatch`` (multi-relation
-    snapshot swap — sinks can't express it).  Replay-idempotent, so no
-    batch guard (module docstring).  ``tombstone_col`` names an
-    optional boolean column for CDC-shaped feeds: true rows DELETE
-    their asset (``delete`` — the G10 deletion path), others upsert;
-    within one micro-batch tombstones win over upserts of the same id
-    (``streaming/dedup_index.maintain_dedup_stream`` has the
-    contract)."""
-
-    def _process(batch: DataFrame, batch_id: int) -> None:
-        if tombstone_col is None:
-            state.apply_batch(batch, id_col, payload_col)
-            return
-        dead = batch.where(F.col(tombstone_col)).select(id_col)
-        live = batch.where(
-            ~F.coalesce(F.col(tombstone_col), F.lit(False))
-        )
-        if not live.isEmpty():
-            state.apply_batch(live, id_col, payload_col)
-        state.delete(dead)
-
-    return start_maintenance_stream(stream, _process, checkpoint_dir,
-                                    trigger_once)

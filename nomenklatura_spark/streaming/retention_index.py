@@ -34,12 +34,8 @@ presence relation — the raw event history is never rescanned.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
-from pyspark.sql.streaming import StreamingQuery
 
-from nomenklatura_spark.streaming.state import (
-    VersionedState,
-    start_maintenance_stream,
-)
+from nomenklatura_spark.streaming.state import VersionedState
 
 _PRESENCE_SCHEMA = "u string, day date"
 
@@ -61,7 +57,7 @@ class RetentionIndexState(VersionedState):
     ) -> DataFrame:
         """Fold one micro-batch: project to (user, day), distinct-union
         with state.  Pure set algebra — idempotent by construction."""
-        if batch_id is not None and batch_id <= self.last_batch(scope):
+        if self._replayed(batch_id, scope):
             return self.spark.createDataFrame([], _PRESENCE_SCHEMA)
         batch = df.select(
             F.col(user_col).cast("string").alias("u"),
@@ -74,12 +70,7 @@ class RetentionIndexState(VersionedState):
             merged = batch.distinct()
         else:
             merged = self.presence().unionByName(batch).distinct()
-        nv = self.version() + 1
-        merged.write.mode("overwrite").parquet(self._path("presence", nv))
-        if batch_id is None:
-            self._bump(nv)
-        else:
-            self._bump(nv, batch_id, scope)
+        self.commit({"presence": merged}, batch_id=batch_id, scope=scope)
         return batch
 
     def retention(self, version: int | None = None) -> DataFrame:
@@ -100,25 +91,3 @@ class RetentionIndexState(VersionedState):
             )
             .agg(F.count(F.lit(1)).alias("active_users"))
         )
-
-
-def maintain_retention_stream(
-    stream: DataFrame,
-    state: RetentionIndexState,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    checkpoint_dir: str | None = None,
-    trigger_once: bool = False,
-) -> StreamingQuery:
-    """Structured Streaming driver: each micro-batch folds its events
-    into the presence state via ``foreachBatch``."""
-    scope = checkpoint_dir or ""
-
-    def _process(batch: DataFrame, batch_id: int) -> None:
-        state.apply_batch(
-            batch, user_col, ts_col, batch_id=batch_id, scope=scope
-        )
-
-    return start_maintenance_stream(
-        stream, _process, checkpoint_dir, trigger_once
-    )

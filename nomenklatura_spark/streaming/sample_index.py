@@ -29,19 +29,16 @@ was already outside the k, and the threshold only tightens over time.
 
 State is one k-row versioned parquet relation behind the shared
 VERSION pointer (crash-safe swap, time travel); replay-idempotent, so
-no batch guard.  At 100 TB the fold is a TakeOrdered over batch + k
-rows — the sample index is the cheapest maintained index in the tier.
+the batch guard only spares a no-op snapshot.  At 100 TB the fold is a
+TakeOrdered over batch + k rows — the sample index is the cheapest
+maintained index in the tier.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
-from pyspark.sql.streaming import StreamingQuery
 
-from nomenklatura_spark.streaming.state import (
-    VersionedState,
-    start_maintenance_stream,
-)
+from nomenklatura_spark.streaming.state import VersionedState
 
 _SAMPLE_SCHEMA = "id string, weight bigint, priority_key bigint"
 
@@ -87,10 +84,14 @@ class SampleIndexState(VersionedState):
         df: DataFrame,
         weight: Column,
         id_col: str = "doc_id",
+        batch_id: int | None = None,
+        scope: str = "",
     ) -> None:
         """Fold one micro-batch into the maintained sample.  ``weight``
         is a Column over ``df`` (e.g. ``token_count(F.col("text"))``) —
         deterministic in the row, like the batch sampler's."""
+        if self._replayed(batch_id, scope):
+            return
         batch = (
             self._keyed(df, id_col, weight)
             .groupBy("id")
@@ -107,11 +108,7 @@ class SampleIndexState(VersionedState):
             # the batch alone, keeping the first fold's plan free of
             # empty-state join subtrees (the measured fold-1 anomaly)
             merged = batch.orderBy("priority_key", "id").limit(self.k)
-            nv = self.version() + 1
-            merged.write.mode("overwrite").parquet(
-                self._path("sample", nv)
-            )
-            self._bump(nv)
+            self.commit({"sample": merged}, batch_id=batch_id, scope=scope)
             return
         state = self.sample()
         # executable upsert boundary (module docstring): an in-sample id
@@ -129,24 +126,10 @@ class SampleIndexState(VersionedState):
             .orderBy("priority_key", "id")
             .limit(self.k)
         )
-        nv = self.version() + 1
-        # the boundary probe and the snapshot write are independent
-        # reads of the checkpointed batch + k-row state — overlap them
-        # (guide §2.6); a boundary violation still raises BEFORE the
-        # pointer bump, so no state commits (the crash-safe swap
-        # tolerates laid-down-but-unreferenced snapshot dirs)
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            f_off = pool.submit(offenders_plan.collect)
-            f_write = pool.submit(
-                lambda: merged.write.mode("overwrite").parquet(
-                    self._path("sample", nv)
-                )
-            )
-            offenders = f_off.result()
-            f_write.result()
-        if offenders:
+        def _probe(nv: int) -> None:
+            offenders = offenders_plan.collect()
+            if not offenders:
+                return
             names = ", ".join(
                 f"{r['id']}({r['priority_key']}->{r['_new']})"
                 for r in offenders
@@ -159,7 +142,14 @@ class SampleIndexState(VersionedState):
                 f"rebuild(full_history, weight) (exact rescan) or "
                 f"ingest content-stable ids."
             )
-        self._bump(nv)
+
+        # the boundary probe and the snapshot write are independent
+        # reads of the checkpointed batch + k-row state — ``commit``
+        # overlaps them (guide §2.6); a boundary violation still raises
+        # BEFORE the pointer swap, so no state commits
+        self.commit(
+            {"sample": merged}, (_probe,), batch_id=batch_id, scope=scope
+        )
 
     def rebuild(
         self,
@@ -181,31 +171,9 @@ class SampleIndexState(VersionedState):
             )
         )
         fresh = keyed.orderBy("priority_key", "id").limit(self.k)
-        nv = self.version() + 1
-        fresh.write.mode("overwrite").parquet(self._path("sample", nv))
-        self._bump(nv)
-        return nv
+        return self.commit({"sample": fresh})
 
     def serve_sample(self) -> DataFrame:
         """(id, weight, priority_key) — the current sample, priority
         order, straight from state."""
         return self.sample().orderBy("priority_key", "id")
-
-
-def maintain_sample_stream(
-    stream: DataFrame,
-    state: SampleIndexState,
-    weight: Column,
-    id_col: str = "doc_id",
-    checkpoint_dir: str | None = None,
-    trigger_once: bool = False,
-) -> StreamingQuery:
-    """Structured Streaming driver: fold each micro-batch into the
-    maintained sample via ``foreachBatch``.  Replay-idempotent (min-k
-    of deterministic priorities), so no batch guard."""
-
-    def _process(batch: DataFrame, batch_id: int) -> None:
-        state.apply_batch(batch, weight, id_col)
-
-    return start_maintenance_stream(stream, _process, checkpoint_dir,
-                                    trigger_once)

@@ -56,12 +56,8 @@ never the raw history.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
-from pyspark.sql.streaming import StreamingQuery
 
-from nomenklatura_spark.streaming.state import (
-    VersionedState,
-    start_maintenance_stream,
-)
+from nomenklatura_spark.streaming.state import VersionedState
 
 _SESS_SCHEMA = "u string, s timestamp, e timestamp, n bigint, sv bigint"
 
@@ -152,7 +148,7 @@ class SessionIndexState(VersionedState):
         is one straggler task otherwise, and silently truncating it
         would corrupt that user's intervals.
         """
-        if batch_id is not None and batch_id <= self.last_batch(scope):
+        if self._replayed(batch_id, scope):
             return self.spark.createDataFrame([], _SESS_SCHEMA)
         val = (
             F.col(value_col).cast("bigint")
@@ -209,38 +205,5 @@ class SessionIndexState(VersionedState):
             folded = folded.unionByName(
                 prev.join(touched, "u", "left_anti")
             )
-        nv = self.version() + 1
-        folded.write.mode("overwrite").parquet(self._path("sessions", nv))
-        if batch_id is None:
-            self._bump(nv)
-        else:
-            self._bump(nv, batch_id, scope)
+        self.commit({"sessions": folded}, batch_id=batch_id, scope=scope)
         return batch
-
-
-def maintain_session_stream(
-    stream: DataFrame,
-    state: SessionIndexState,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    value_col: str | None = "value_int",
-    checkpoint_dir: str | None = None,
-    trigger_once: bool = False,
-) -> StreamingQuery:
-    """Structured Streaming driver: each micro-batch folds its events
-    into the session-interval state via ``foreachBatch``."""
-    scope = checkpoint_dir or ""
-
-    def _process(batch: DataFrame, batch_id: int) -> None:
-        state.apply_batch(
-            batch,
-            user_col,
-            ts_col,
-            value_col,
-            batch_id=batch_id,
-            scope=scope,
-        )
-
-    return start_maintenance_stream(
-        stream, _process, checkpoint_dir, trigger_once
-    )

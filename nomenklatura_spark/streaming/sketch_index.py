@@ -22,17 +22,13 @@ foreign-bounds increments).
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
-from pyspark.sql.streaming import StreamingQuery
 
 from nomenklatura_spark.operators.sketch import (
     cms_sketch,
     hist_quantile,
     hist_sketch,
 )
-from nomenklatura_spark.streaming.state import (
-    VersionedState,
-    start_maintenance_stream,
-)
+from nomenklatura_spark.streaming.state import VersionedState
 
 _CMS_SCHEMA = "d int, bucket int, cnt long"
 _HIST_SCHEMA = "key string, bin int, cnt long"
@@ -67,7 +63,7 @@ class CmsIndexState(VersionedState):
         batch_id: int | None = None,
         scope: str = "",
     ) -> DataFrame:
-        if batch_id is not None and batch_id <= self.last_batch(scope):
+        if self._replayed(batch_id, scope):
             return self.spark.createDataFrame([], _CMS_SCHEMA)
         batch = cms_sketch(
             df, value_col, self.depth, self.width, self.prefix, weight_col
@@ -86,12 +82,7 @@ class CmsIndexState(VersionedState):
                 .groupBy("d", "bucket")
                 .agg(F.sum("cnt").alias("cnt"))
             )
-        nv = self.version() + 1
-        merged.write.mode("overwrite").parquet(self._path("counters", nv))
-        if batch_id is None:
-            self._bump(nv)
-        else:
-            self._bump(nv, batch_id, scope)
+        self.commit({"counters": merged}, batch_id=batch_id, scope=scope)
         return batch
 
 
@@ -141,7 +132,7 @@ class HistIndexState(VersionedState):
         batch_id: int | None = None,
         scope: str = "",
     ) -> DataFrame:
-        if batch_id is not None and batch_id <= self.last_batch(scope):
+        if self._replayed(batch_id, scope):
             return self.spark.createDataFrame([], _HIST_SCHEMA)
         batch = hist_sketch(
             df.select(F.col(key_col).cast("string").alias("key"), value_col),
@@ -161,47 +152,8 @@ class HistIndexState(VersionedState):
                 .groupBy("key", "bin")
                 .agg(F.sum("cnt").alias("cnt"))
             )
-        nv = self.version() + 1
-        merged.write.mode("overwrite").parquet(self._path("bins", nv))
-        if batch_id is None:
-            self._bump(nv)
-        else:
-            self._bump(nv, batch_id, scope)
+        self.commit({"bins": merged}, batch_id=batch_id, scope=scope)
         return batch
-
-
-def maintain_cms_stream(
-    stream: DataFrame,
-    state: CmsIndexState,
-    value_col: str,
-    weight_col: str | None = None,
-    checkpoint_dir: str | None = None,
-    trigger_once: bool = False,
-) -> StreamingQuery:
-    scope = checkpoint_dir or ""
-
-    def _process(batch: DataFrame, batch_id: int) -> None:
-        state.apply_batch(
-            batch, value_col, weight_col, batch_id=batch_id, scope=scope
-        )
-
-    return start_maintenance_stream(stream, _process, checkpoint_dir, trigger_once)
-
-
-def maintain_hist_stream(
-    stream: DataFrame,
-    state: HistIndexState,
-    key_col: str,
-    value_col: str,
-    checkpoint_dir: str | None = None,
-    trigger_once: bool = False,
-) -> StreamingQuery:
-    scope = checkpoint_dir or ""
-
-    def _process(batch: DataFrame, batch_id: int) -> None:
-        state.apply_batch(batch, key_col, value_col, batch_id=batch_id, scope=scope)
-
-    return start_maintenance_stream(stream, _process, checkpoint_dir, trigger_once)
 
 
 _CAND_SCHEMA = "value string"
@@ -293,37 +245,27 @@ class HeavyHittersIndexState(VersionedState):
         floor0, folds = self._floor_meta()
         return floor0 + folds * self.local_threshold
 
-    def _write_all(
+    def _commit_all(
         self,
         counters: DataFrame,
         cands: DataFrame,
         floor0: int,
         folds: int,
-    ) -> int:
+        batch_id: int | None = None,
+        scope: str = "",
+    ) -> None:
         # the three relations are independent once their shared input
-        # is materialized — write them concurrently (guide §2.6); all
-        # complete before the caller's single pointer bump, so the
-        # crash-consistency story is unchanged
-        from concurrent.futures import ThreadPoolExecutor
-
-        nv = self.version() + 1
-
-        def _write(df: DataFrame, rel: str) -> None:
-            df.write.mode("overwrite").parquet(self._path(rel, nv))
-
+        # is materialized — ``commit`` writes them concurrently (guide
+        # §2.6) before its single pointer swap
         meta = self.spark.createDataFrame(
             [(int(floor0), int(folds))], _META_SCHEMA
         )
-        with ThreadPoolExecutor(max_workers=3) as pool:
-            futs = [
-                pool.submit(_write, counters, "counters"),
-                pool.submit(_write, cands, "candidates"),
-                pool.submit(_write, meta, "meta"),
-            ]
-            for f in futs:
-                f.result()
+        nv = self.commit(
+            {"counters": counters, "candidates": cands, "meta": meta},
+            batch_id=batch_id,
+            scope=scope,
+        )
         self._meta_cache = (nv, int(floor0), int(folds))
-        return nv
 
     def apply_batch(
         self,
@@ -332,7 +274,7 @@ class HeavyHittersIndexState(VersionedState):
         batch_id: int | None = None,
         scope: str = "",
     ) -> None:
-        if batch_id is not None and batch_id <= self.last_batch(scope):
+        if self._replayed(batch_id, scope):
             return
         # checkpointed ONCE: the counter write and the candidate write
         # both aggregate this projection — without it each write job
@@ -366,11 +308,7 @@ class HeavyHittersIndexState(VersionedState):
             )
             cands = self.candidates().union(local_heavy).distinct()
         floor0, folds = self._floor_meta()
-        nv = self._write_all(merged, cands, floor0, folds + 1)
-        if batch_id is None:
-            self._bump(nv)
-        else:
-            self._bump(nv, batch_id, scope)
+        self._commit_all(merged, cands, floor0, folds + 1, batch_id, scope)
 
     def repair_candidates(
         self,
@@ -402,8 +340,7 @@ class HeavyHittersIndexState(VersionedState):
             .select("value")
         )
         cands = self.candidates().union(heavy).distinct()
-        nv = self._write_all(self.counters(), cands, f, 0)
-        self._bump(nv)
+        self._commit_all(self.counters(), cands, f, 0)
         return f
 
     def serve_topk(self, k: int, strict: bool = False) -> DataFrame:

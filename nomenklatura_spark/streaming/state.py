@@ -1,37 +1,71 @@
-"""Shared snapshot plumbing for the incrementally-maintained indexes.
+"""Shared snapshot plumbing for the incrementally-maintained indexes —
+the one commit protocol and the one stream driver every index uses.
 
 Every maintained index (blocking entries, MinHash-LSH dedup, IVF
-vectors, vocabulary) stores its relations as versioned parquet
-snapshots behind a single VERSION pointer file: writers lay down the
-new ``v{N}`` directories first and swap the pointer last with an atomic
-rename, so a crash mid-write leaves the previous version intact and
-readers never see a torn snapshot (time travel = read an older N).  On
-a cluster the same call sites become Delta tables and the pointer
-becomes the Delta log.
+vectors, vocabulary, sketches, ...) stores its relations as versioned
+parquet snapshots behind a single VERSION pointer file, and commits a
+fold through ``VersionedState.commit``: it picks ``v{N+1}``, lays down
+every relation of that version side by side, lets the caller's probes
+raise, and only then swaps the pointer with an atomic rename.  A crash
+or a raised contract mid-fold therefore leaves the previous version
+intact and readers never see a torn snapshot (time travel = read an
+older N).  On a cluster the same call sites become Delta tables and the
+pointer becomes the Delta log.
 
 The pointer also records the last-applied Structured Streaming batch
-id.  ``foreachBatch`` delivery is at-least-once: a crash between the
-snapshot swap and the streaming checkpoint commit redelivers the same
-micro-batch.  Upsert-by-key states are naturally replay-idempotent and
-can ignore it; ADDITIVE states (the vocabulary's counter merge) must
-skip batches at or below ``last_batch()`` or redelivery double-counts.
+id and its scope (the checkpoint dir).  ``foreachBatch`` delivery is
+at-least-once: a crash between the snapshot swap and the streaming
+checkpoint commit redelivers the same micro-batch.  Every state's
+``apply_batch`` takes ``batch_id``/``scope`` and skips a batch at or
+below ``last_batch(scope)`` (``_replayed``); ADDITIVE states (the
+vocabulary's counter merge) depend on it, or redelivery double-counts,
+while upsert-by-key and idempotent states are merely spared a no-op
+snapshot.  ``maintain_stream`` is the one ``foreachBatch`` driver that
+feeds a stream into any state.
 """
 
 from __future__ import annotations
 
+import inspect
 import os
 import shutil
-from collections.abc import Callable
+import warnings
+from collections.abc import Callable, Mapping
+from concurrent.futures import ThreadPoolExecutor
+from functools import partial
+from typing import Any, NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-# Hash-bucket count for the big key-partitioned state relations
-# (signatures/bands/pairs of the dedup indexes).  Scale-dependent:
-# size so one bucket is a sensible rewrite unit (~a Delta file's worth
-# of rows); the local default keeps file counts small at test scale.
-# On a cluster this is a deployment conf, like Delta's file sizing.
-DEFAULT_STATE_BUCKETS = int(os.environ.get("NK_STATE_BUCKETS", "16"))
+# Hash-bucket count of the big key-partitioned state relations
+# (signatures/bands/pairs of the dedup indexes): one bucket is the
+# copy-on-write rewrite unit.  A constant, not a setting: the on-disk
+# ``_bucket=`` layout is a function of it, so a state reopened with a
+# different count would prune the wrong directories.
+STATE_BUCKETS = 16
+
+
+def run_concurrently(*thunks: Callable[[], Any]) -> list:
+    """Run independent driver-side Spark actions side by side, one
+    thread each, and return their results in order; a single thunk runs
+    on the calling thread.  Every thunk finishes before the first
+    failure is re-raised."""
+    if len(thunks) == 1:
+        return [thunks[0]()]
+    with ThreadPoolExecutor(max_workers=len(thunks)) as pool:
+        futures = [pool.submit(t) for t in thunks]
+        return [f.result() for f in futures]
+
+
+class Bucketed(NamedTuple):
+    """A ``commit`` write assembled copy-on-write by ``_write_bucketed``:
+    ``data`` bucketed by ``key``; ``rewrite_buckets`` None carries
+    nothing over from the previous version, ``[]`` carries everything."""
+
+    data: DataFrame
+    key: str
+    rewrite_buckets: list[int] | None
 
 
 class VersionedState:
@@ -40,7 +74,6 @@ class VersionedState:
     def __init__(self, spark: SparkSession, state_dir: str) -> None:
         self.spark = spark
         self.state_dir = state_dir
-        self.n_buckets = DEFAULT_STATE_BUCKETS
         os.makedirs(state_dir, exist_ok=True)
 
     @property
@@ -50,7 +83,8 @@ class VersionedState:
     def _pointer(self) -> tuple[int, int, str]:
         try:
             with open(self._version_file) as fh:
-                parts = fh.read().split()
+                # the scope is a path and may hold spaces
+                parts = fh.read().split(maxsplit=2)
         except FileNotFoundError:
             return -1, -1, ""
         version = int(parts[0])
@@ -71,22 +105,57 @@ class VersionedState:
         _, batch, stored = self._pointer()
         return batch if stored == scope else -1
 
+    def _replayed(self, batch_id: int | None, scope: str) -> bool:
+        """The replay guard: ``batch_id`` of stream ``scope`` has
+        already been folded in (None — a direct call — never is)."""
+        return batch_id is not None and batch_id <= self.last_batch(scope)
+
     def _path(self, rel: str, version: int) -> str:
         return os.path.join(self.state_dir, rel, f"v{version}")
 
-    def _bump(
+    def commit(
         self,
-        version: int,
+        writes: Mapping[str, DataFrame | Bucketed | Callable[[], DataFrame]],
+        tasks: tuple[Callable[[int], None], ...] = (),
         batch_id: int | None = None,
         scope: str = "",
-    ) -> None:
+    ) -> int:
+        """Commit one fold as version ``nv = version() + 1``.
+
+        Every relation in ``writes`` is laid down at ``rel/v{nv}`` and
+        every task runs with ``nv``, all side by side (independent
+        driver actions overlap).  A write is a DataFrame (a flat
+        overwrite), a ``Bucketed`` (copy-on-write assembly, see
+        ``_write_bucketed``) or a zero-argument callable that builds
+        the DataFrame inside the pool — for a relation whose plan itself
+        runs Spark actions (the component folds).  A task lays down data
+        outside the ``rel/v{nv}`` layout (BM25's batch partition) or
+        probes a contract and raises.  Only when all of them succeeded
+        does the pointer swap to ``nv`` with ``(batch_id, scope)``;
+        ``batch_id`` None keeps the stored batch and scope.  Any failure
+        re-raises before the swap, so nothing commits — the orphaned
+        ``v{nv}`` directories are overwritten by the next fold.
+        Returns ``nv``."""
+        nv = self.version() + 1
+
+        def _write(rel: str, w) -> None:
+            if isinstance(w, Bucketed):
+                self._write_bucketed(rel, nv, *w)
+                return
+            df = w if isinstance(w, DataFrame) else w()
+            df.write.mode("overwrite").parquet(self._path(rel, nv))
+
+        run_concurrently(
+            *(partial(_write, rel, w) for rel, w in writes.items()),
+            *(partial(task, nv) for task in tasks),
+        )
         if batch_id is None:
-            _, batch_id, stored = self._pointer()
-            scope = stored
+            _, batch_id, scope = self._pointer()
         tmp = self._version_file + ".tmp"
         with open(tmp, "w") as fh:
-            fh.write(f"{version} {batch_id} {scope}".rstrip())
+            fh.write(f"{nv} {batch_id} {scope}".rstrip())
         os.replace(tmp, self._version_file)
+        return nv
 
     def _read(
         self, rel: str, schema: str, version: int | None = None
@@ -105,7 +174,7 @@ class VersionedState:
     #
     # The big key-partitioned relations (dedup signatures/bands/pairs)
     # are stored hash-BUCKETED by key (``_bucket = pmod(xxhash64(key),
-    # n_buckets)`` partition directories) and each new version is
+    # STATE_BUCKETS)`` partition directories) and each new version is
     # assembled file-wise, the local analog of a Delta ``MERGE INTO``'s
     # copy-on-write: bucket directories whose rows are untouched by the
     # fold are HARDLINKED from the previous version (metadata-only, the
@@ -121,8 +190,9 @@ class VersionedState:
     # — vacuum's rmtree drops directory entries and the shared bytes
     # live until the last version referencing them goes.
 
-    def _bucket_of(self, col: "F.Column") -> "F.Column":
-        return F.pmod(F.xxhash64(col), F.lit(self.n_buckets)).cast("int")
+    @staticmethod
+    def _bucket_of(col: "F.Column") -> "F.Column":
+        return F.pmod(F.xxhash64(col), F.lit(STATE_BUCKETS)).cast("int")
 
     @staticmethod
     def _has_parquet(path: str) -> bool:
@@ -186,7 +256,19 @@ class VersionedState:
         full rewrite); ``[]`` carries everything (pure append).  The
         caller guarantees ``data`` holds the complete new content of
         every bucket in ``rewrite_buckets`` plus only NEW rows for the
-        carried buckets."""
+        carried buckets.  Carrying over from a previous version in the
+        flat (pre-bucketing) layout raises ValueError: none of its rows
+        sit in ``_bucket=`` directories, so the new version would
+        silently lose them all.  Files that cannot be hardlinked are
+        copied, with one warning per call."""
+        src = self._path(rel, new_version - 1)
+        carry = rewrite_buckets is not None and os.path.isdir(src)
+        if carry and any(f.endswith(".parquet") for f in os.listdir(src)):
+            raise ValueError(
+                f"state {self.state_dir}: {rel}/v{new_version - 1} has "
+                f"the flat pre-bucketing layout, which a bucketed fold "
+                f"cannot carry over; rebuild the state from its source"
+            )
         dst = self._path(rel, new_version)
         if os.path.exists(dst):
             # orphan from a crashed fold (laid down, pointer never
@@ -194,8 +276,8 @@ class VersionedState:
             # non-bucketed writers' mode("overwrite")
             shutil.rmtree(dst)
         os.makedirs(dst, exist_ok=True)
-        src = self._path(rel, new_version - 1)
-        if rewrite_buckets is not None and os.path.isdir(src):
+        copied = 0
+        if carry:
             skip = {f"_bucket={b}" for b in rewrite_buckets}
             for d in os.listdir(src):
                 if not d.startswith("_bucket=") or d in skip:
@@ -213,12 +295,22 @@ class VersionedState:
                     try:
                         os.link(spath, dpath)
                     except OSError:
+                        # e.g. a filesystem without hardlinks: the fold
+                        # stays correct but writes O(state) bytes
                         shutil.copy2(spath, dpath)
+                        copied += 1
+        if copied:
+            warnings.warn(
+                f"state {self.state_dir}: {copied} file(s) of {rel} "
+                f"copied instead of hardlinked into v{new_version}",
+                RuntimeWarning,
+                stacklevel=2,
+            )
         (
             data.withColumn("_bucket", self._bucket_of(F.col(key)))
             # one small shuffle of the (batch-sized) write set so each
             # bucket lands in ~one file instead of tasks x buckets
-            .repartition(self.n_buckets, "_bucket")
+            .repartition(STATE_BUCKETS, "_bucket")
             .write.mode("append")
             .partitionBy("_bucket")
             .parquet(dst)
@@ -262,17 +354,51 @@ class VersionedState:
         return removed
 
 
-def start_maintenance_stream(
+def maintain_stream(
     stream: DataFrame,
-    process: Callable[[DataFrame, int], None],
+    state: VersionedState,
     checkpoint_dir: str | None = None,
     trigger_once: bool = False,
+    tombstone_col: str | None = None,
+    **fold_kwargs,
 ) -> StreamingQuery:
-    """Shared foreachBatch writer wiring for the maintained indexes
-    (the snapshot merges are multi-relation transactions no sink can
-    express).  ``trigger_once`` drains the backlog and terminates
-    (availableNow) for cron-style catch-up runs."""
-    writer = stream.writeStream.foreachBatch(process)
+    """Structured Streaming driver for every maintained index: each
+    micro-batch folds into ``state`` via ``foreachBatch`` (a fold is a
+    multi-relation snapshot commit, which no sink can express) as
+    ``state.apply_batch(batch, batch_id=..., scope=checkpoint_dir or
+    "", **fold_kwargs)``.  The scope keys the replay guard to this
+    stream incarnation, since Spark restarts batch numbering per
+    checkpoint.  An empty micro-batch is skipped: it commits nothing.
+    ``trigger_once`` drains the backlog and terminates (availableNow),
+    for cron-style catch-up runs.
+
+    ``tombstone_col`` names an optional boolean column for CDC-shaped
+    feeds into a state with a ``delete`` (the dedup indexes): rows
+    where it is true DELETE their id (the fold's ``id_col``), other
+    rows upsert as usual.  Within one micro-batch tombstones win over
+    upserts of the same id (the delete folds after the upsert), so a
+    batch that both rewrites and tombstones a document resolves to
+    deleted — the deterministic reading of an intra-batch conflict."""
+    scope = checkpoint_dir or ""
+    if tombstone_col is not None:
+        id_col = fold_kwargs.get("id_col") or inspect.signature(
+            state.apply_batch
+        ).parameters["id_col"].default
+
+    def _process(batch: DataFrame, batch_id: int) -> None:
+        live = batch
+        if tombstone_col is not None:
+            live = batch.where(
+                ~F.coalesce(F.col(tombstone_col), F.lit(False))
+            )
+        if not live.isEmpty():
+            state.apply_batch(
+                live, batch_id=batch_id, scope=scope, **fold_kwargs
+            )
+        if tombstone_col is not None:
+            state.delete(batch.where(F.col(tombstone_col)).select(id_col))
+
+    writer = stream.writeStream.foreachBatch(_process)
     if checkpoint_dir is not None:
         writer = writer.option("checkpointLocation", checkpoint_dir)
     if trigger_once:

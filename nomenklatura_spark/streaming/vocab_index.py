@@ -28,12 +28,8 @@ t.count + s.count`` on the word key.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
-from pyspark.sql.streaming import StreamingQuery
 
-from nomenklatura_spark.streaming.state import (
-    VersionedState,
-    start_maintenance_stream,
-)
+from nomenklatura_spark.streaming.state import VersionedState
 from nomenklatura_spark.textops.analysis import corpus_vocab
 
 _VOCAB_SCHEMA = "word string, count long, n_docs long"
@@ -68,7 +64,7 @@ class VocabIndexState(VersionedState):
         already applied — a streaming redelivery).  ``scope`` names the
         stream incarnation (the checkpoint dir): batch ids restart per
         checkpoint, so the guard only compares ids within one scope."""
-        if batch_id is not None and batch_id <= self.last_batch(scope):
+        if self._replayed(batch_id, scope):
             return self.spark.createDataFrame([], _VOCAB_SCHEMA)
         batch = corpus_vocab(docs, text_col, id_col, top_k=None).select(
             "word",
@@ -89,31 +85,5 @@ class VocabIndexState(VersionedState):
                 (F.coalesce("_sd", F.lit(0)) + F.coalesce("_bd", F.lit(0))).alias("n_docs"),
             )
         )
-        nv = self.version() + 1
-        merged.write.mode("overwrite").parquet(self._path("vocab", nv))
-        if batch_id is None:
-            self._bump(nv)
-        else:
-            self._bump(nv, batch_id, scope)
+        self.commit({"vocab": merged}, batch_id=batch_id, scope=scope)
         return batch
-
-
-def maintain_vocab_stream(
-    stream: DataFrame,
-    state: VocabIndexState,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    checkpoint_dir: str | None = None,
-    trigger_once: bool = False,
-) -> StreamingQuery:
-    """Structured Streaming driver: each micro-batch folds into the
-    vocabulary via ``foreachBatch``; the replay guard is scoped to the
-    checkpoint dir, since Spark restarts batch numbering per checkpoint.
-    ``trigger_once`` drains the backlog and terminates (availableNow),
-    for cron-style catch-up runs."""
-    scope = checkpoint_dir or ""
-
-    def _process(batch: DataFrame, batch_id: int) -> None:
-        state.apply_batch(batch, id_col, text_col, batch_id=batch_id, scope=scope)
-
-    return start_maintenance_stream(stream, _process, checkpoint_dir, trigger_once)

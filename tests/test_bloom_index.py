@@ -10,8 +10,8 @@ import os
 from nomenklatura_spark.dedup.bloom import bench_bloom, bloom_contamination
 from nomenklatura_spark.streaming.bloom_index import (
     BloomIndexState,
-    maintain_bloom_stream,
 )
+from nomenklatura_spark.streaming.state import maintain_stream
 
 DOC_SCHEMA = "doc_id long, text string"
 
@@ -88,7 +88,7 @@ def test_maintain_bloom_stream(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .json(src)
     )
-    sq = maintain_bloom_stream(
+    sq = maintain_stream(
         stream, state, checkpoint_dir=str(tmp_path / "chk")
     )
     try:

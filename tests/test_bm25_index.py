@@ -12,8 +12,8 @@ from pyspark.sql import functions as F
 
 from nomenklatura_spark.streaming.bm25_index import (
     Bm25IndexState,
-    maintain_bm25_stream,
 )
+from nomenklatura_spark.streaming.state import maintain_stream
 from nomenklatura_spark.textops.retrieval import bm25_topk
 
 DOC_SCHEMA = "doc_id long, text string"
@@ -102,7 +102,7 @@ def test_maintain_bm25_stream(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .json(src)
     )
-    sq = maintain_bm25_stream(
+    sq = maintain_stream(
         stream, state, checkpoint_dir=str(tmp_path / "chk")
     )
     try:

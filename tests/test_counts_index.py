@@ -11,8 +11,8 @@ from pyspark.sql import functions as F
 
 from nomenklatura_spark.streaming.counts_index import (
     CountsIndexState,
-    maintain_counts_stream,
 )
+from nomenklatura_spark.streaming.state import maintain_stream
 
 SCHEMA = "event_type string, ts string, value_int long"
 
@@ -201,7 +201,7 @@ def test_counts_index_time_travel_and_stream(spark, tmp_path):
         .parquet(str(src / "p"))
     )
     st2 = CountsIndexState(spark, str(tmp_path / "s2"))
-    q = maintain_counts_stream(
+    q = maintain_stream(
         stream,
         st2,
         value_col="value_int",

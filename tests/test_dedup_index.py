@@ -13,8 +13,8 @@ from pyspark.sql import functions as F
 from nomenklatura_spark.dedup.minhash import minhash_dedup_pairs
 from nomenklatura_spark.streaming.dedup_index import (
     DedupIndexState,
-    maintain_dedup_stream,
 )
+from nomenklatura_spark.streaming.state import maintain_stream
 
 DOC_SCHEMA = "doc_id string, text string"
 
@@ -267,7 +267,7 @@ def test_streaming_tombstones_delete(spark, tmp_path):
                 json.dumps({"doc_id": d, "text": t, "deleted": False})
                 + "\n"
             )
-    q = maintain_dedup_stream(
+    q = maintain_stream(
         stream,
         state,
         checkpoint_dir=str(tmp_path / "chk"),
@@ -326,7 +326,7 @@ def test_streaming_dedup_maintenance(spark, tmp_path):
     with open(src / "b1.json", "w") as fh:
         for d, t in BATCH1:
             fh.write(json.dumps({"doc_id": d, "text": t}) + "\n")
-    q = maintain_dedup_stream(stream, state, checkpoint_dir=str(tmp_path / "chk"))
+    q = maintain_stream(stream, state, checkpoint_dir=str(tmp_path / "chk"))
     try:
         q.processAllAvailable()
         assert state.version() >= 0

@@ -12,8 +12,8 @@ from pyspark.sql import functions as F
 from nomenklatura_spark.operators.temporal import funnel_steps
 from nomenklatura_spark.streaming.funnel_index import (
     FunnelIndexState,
-    maintain_funnel_stream,
 )
+from nomenklatura_spark.streaming.state import maintain_stream
 
 STEPS = ["view", "click", "purchase"]
 SCHEMA = "user_id string, ts string, event_type string"
@@ -416,7 +416,7 @@ def test_maintain_funnel_stream(spark, tmp_path):
         .json(src)
     )
     stream = stream.withColumn("ts", F.to_timestamp("ts"))
-    q = maintain_funnel_stream(
+    q = maintain_stream(
         stream, state, checkpoint_dir=str(tmp_path / "chk")
     )
     try:

@@ -16,8 +16,8 @@ from nomenklatura_spark.operators.blocker import (
 from nomenklatura_spark.functions.tokenize import tokenize_statements
 from nomenklatura_spark.streaming.index import (
     BlockingIndexState,
-    maintain_index_stream,
 )
+from nomenklatura_spark.streaming.state import maintain_stream
 
 STMT_SCHEMA = "schema string, canonical_id string, value string, prop_type string"
 
@@ -103,7 +103,7 @@ def test_streaming_maintenance(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)  # one micro-batch per file
         .json(src)
     )
-    q = maintain_index_stream(stream, idx, str(tmp_path / "chk"))
+    q = maintain_stream(stream, idx, str(tmp_path / "chk"), trigger_once=True)
     q.awaitTermination(120)
 
     # two micro-batches on top of the empty bootstrap
@@ -173,10 +173,7 @@ def test_maintain_vector_stream(spark, tmp_path):
     """The Structured-Streaming driver folds file-source micro-batches
     into the vector index."""
     from nomenklatura_spark.session import load_table
-    from nomenklatura_spark.streaming.ann_index import (
-        VectorIndexState,
-        maintain_vector_stream,
-    )
+    from nomenklatura_spark.streaming.ann_index import VectorIndexState
 
     emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
     base = emb.where(F.col("vec_id") % 3 != 0)
@@ -193,8 +190,8 @@ def test_maintain_vector_stream(spark, tmp_path):
     stream = spark.readStream.schema(
         "vec_id bigint, embedding array<double>"
     ).parquet(src)
-    q = maintain_vector_stream(
-        stream, idx, str(tmp_path / "ckpt")
+    q = maintain_stream(
+        stream, idx, str(tmp_path / "ckpt"), trigger_once=True
     )
     q.awaitTermination(120)
     assert idx.version() >= 1

@@ -13,8 +13,8 @@ from nomenklatura_spark.multimodal.dhash import dhash_pairs, dhash_signatures
 from nomenklatura_spark.resolver.components import connected_components
 from nomenklatura_spark.streaming.media_index import (
     MediaDedupIndexState,
-    maintain_media_dedup_stream,
 )
+from nomenklatura_spark.streaming.state import maintain_stream
 
 ASSET_SCHEMA = "asset_id long, media_type string, payload binary"
 
@@ -281,7 +281,7 @@ def test_streaming_media_tombstones_delete(spark, tmp_path):
 
     _tdf(B1).coalesce(1).write.mode("append").parquet(str(src))
     stream = spark.readStream.schema(ts_schema).parquet(str(src))
-    q = maintain_media_dedup_stream(
+    q = maintain_stream(
         stream,
         state,
         checkpoint_dir=str(tmp_path / "chk"),
@@ -328,7 +328,7 @@ def test_streaming_media_maintenance(spark, tmp_path):
     state = MediaDedupIndexState(spark, str(tmp_path / "state"))
     _adf(spark, B1).coalesce(1).write.mode("append").parquet(str(src))
     stream = spark.readStream.schema(ASSET_SCHEMA).parquet(str(src))
-    q = maintain_media_dedup_stream(
+    q = maintain_stream(
         stream, state, checkpoint_dir=str(tmp_path / "chk")
     )
     try:

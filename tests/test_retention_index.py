@@ -13,8 +13,8 @@ from pyspark.sql import functions as F
 
 from nomenklatura_spark.streaming.retention_index import (
     RetentionIndexState,
-    maintain_retention_stream,
 )
+from nomenklatura_spark.streaming.state import maintain_stream
 
 SCHEMA = "user_id string, ts string"
 
@@ -125,7 +125,7 @@ def test_maintain_retention_stream(spark, tmp_path):
         .parquet(str(src / "p"))
     )
     state = RetentionIndexState(spark, str(tmp_path / "s"))
-    q = maintain_retention_stream(
+    q = maintain_stream(
         stream,
         state,
         checkpoint_dir=str(tmp_path / "ck"),

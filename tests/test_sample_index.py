@@ -10,8 +10,8 @@ from pyspark.sql import functions as F
 
 from nomenklatura_spark.streaming.sample_index import (
     SampleIndexState,
-    maintain_sample_stream,
 )
+from nomenklatura_spark.streaming.state import maintain_stream
 from nomenklatura_spark.textops.analysis import priority_sample
 
 DOC_SCHEMA = "doc_id long, text string"
@@ -116,8 +116,8 @@ def test_time_travel_and_streaming_driver(spark, tmp_path):
     with open(src / "b1.json", "w") as fh:
         for i in range(10):
             fh.write(json.dumps({"doc_id": i, "text": "a b c"}) + "\n")
-    q = maintain_sample_stream(
-        stream, state, w, checkpoint_dir=str(tmp_path / "chk")
+    q = maintain_stream(
+        stream, state, checkpoint_dir=str(tmp_path / "chk"), weight=w
     )
     try:
         q.processAllAvailable()

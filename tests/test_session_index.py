@@ -11,8 +11,8 @@ from pyspark.sql import functions as F
 
 from nomenklatura_spark.streaming.session_index import (
     SessionIndexState,
-    maintain_session_stream,
 )
+from nomenklatura_spark.streaming.state import maintain_stream
 
 SCHEMA = "user_id string, ts string, value_int long"
 GAP = 1800  # 30 minutes
@@ -214,7 +214,7 @@ def test_maintain_session_stream(spark, tmp_path):
         .parquet(str(src / "p"))
     )
     state = SessionIndexState(spark, str(tmp_path / "s"), gap_seconds=GAP)
-    q = maintain_session_stream(
+    q = maintain_stream(
         stream,
         state,
         checkpoint_dir=str(tmp_path / "ck"),

@@ -276,7 +276,7 @@ def test_maintain_hll_stream(spark, tmp_path):
     import json as _json
     import os as _os
 
-    from nomenklatura_spark.streaming.hll_index import maintain_hll_stream
+    from nomenklatura_spark.streaming.state import maintain_stream
 
     src = str(tmp_path / "src")
     _os.makedirs(src)
@@ -295,8 +295,9 @@ def test_maintain_hll_stream(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .json(src)
     )
-    q = maintain_hll_stream(
-        stream, state, "k", "v", checkpoint_dir=str(tmp_path / "chk")
+    q = maintain_stream(
+        stream, state, checkpoint_dir=str(tmp_path / "chk"),
+        key_col="k", value_col="v",
     )
     try:
         q.processAllAvailable()
@@ -484,10 +485,8 @@ def test_maintain_cms_stream(spark, tmp_path):
     import os as _os
 
     from nomenklatura_spark.operators.sketch import cms_sketch
-    from nomenklatura_spark.streaming.sketch_index import (
-        CmsIndexState,
-        maintain_cms_stream,
-    )
+    from nomenklatura_spark.streaming.sketch_index import CmsIndexState
+    from nomenklatura_spark.streaming.state import maintain_stream
 
     src = str(tmp_path / "src")
     _os.makedirs(src)
@@ -502,8 +501,8 @@ def test_maintain_cms_stream(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .json(src)
     )
-    q = maintain_cms_stream(
-        stream, state, "v", checkpoint_dir=str(tmp_path / "chk")
+    q = maintain_stream(
+        stream, state, checkpoint_dir=str(tmp_path / "chk"), value_col="v"
     )
     try:
         q.processAllAvailable()

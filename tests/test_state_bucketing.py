@@ -11,6 +11,7 @@ import os
 from pyspark.sql import functions as F
 
 from nomenklatura_spark.streaming.dedup_index import DedupIndexState
+from nomenklatura_spark.streaming.state import STATE_BUCKETS
 
 DOC_SCHEMA = "doc_id string, text string"
 
@@ -82,7 +83,7 @@ def test_reingest_rewrites_only_touched_buckets(spark, tmp_path):
             DOC_SCHEMA,
         )
     )
-    tb = _bucket_of(spark, "a3", state.n_buckets)
+    tb = _bucket_of(spark, "a3", STATE_BUCKETS)
     for rel in ("signatures", "bands"):
         v1 = str(tmp_path / "state" / rel / "v1")
         v2 = str(tmp_path / "state" / rel / "v2")

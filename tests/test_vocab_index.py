@@ -10,8 +10,8 @@ import os
 
 from nomenklatura_spark.streaming.vocab_index import (
     VocabIndexState,
-    maintain_vocab_stream,
 )
+from nomenklatura_spark.streaming.state import maintain_stream
 from nomenklatura_spark.textops.analysis import corpus_vocab
 
 DOC_SCHEMA = "doc_id long, text string"
@@ -60,7 +60,7 @@ def test_maintain_vocab_stream(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)  # one micro-batch per file
         .json(src)
     )
-    q = maintain_vocab_stream(stream, state, checkpoint_dir=str(tmp_path / "chk"))
+    q = maintain_stream(stream, state, checkpoint_dir=str(tmp_path / "chk"))
     try:
         q.processAllAvailable()
     finally:
