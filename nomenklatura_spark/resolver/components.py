@@ -5,21 +5,36 @@ edges define clusters; each cluster's canonical id is its maximum member
 under the identifier ordering (weight, id) — plain ids < ``NK-`` canonicals
 < Wikidata QIDs (``resolver/identifier.py:16-29``).
 
-Implementation: large-star/small-star-style alternating min-label
-propagation on DataFrames (the standard Spark CC formulation from the
-"Connected Components in MapReduce and Beyond" paper lineage, simplified
-to repeated min-neighbor joins with AQE handling skew). ER clusters are
-small and shallow (size 2-50 per FIXTURES.md), so convergence is a handful
-of iterations; each iteration is one self-join + one aggregation, both
-shuffling on the node id.
+Implementation: every component is labeled with its minimum member id,
+computed one of two ways with bit-identical labels.
 
-checkpoint/localCheckpoint truncates the lineage each iteration so the
-plan doesn't grow exponentially at scale.
+- Bounded driver path: one ``limit(DRIVER_CC_MAX_EDGES + 1)`` collect of
+  the edge list; at or below the bound a union-find on the driver
+  labels the components and the mapping returns as a one-partition
+  local relation.  A micro-batch's (contracted) pair graph always fits,
+  and there the per-round cost of a distributed formulation is pure
+  job-scheduling overhead: every contraction level pays a checkpoint,
+  an emptiness probe and one job per shuffle.
+- Distributed path, above the bound: large-star/small-star-style star
+  contraction on DataFrames (the standard Spark CC formulation from the
+  "Connected Components in MapReduce and Beyond" paper lineage,
+  simplified to repeated min-neighbor joins with AQE handling skew).
+  Each level is one aggregation plus a contraction join, both
+  shuffling on the node id; localCheckpoint truncates the lineage each
+  level so the plan doesn't grow exponentially at scale.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from collections.abc import Iterable
+
+from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.types import DataType, StructField, StructType
+
+# Edge-count bound of the driver path (module docstring).  A constant,
+# not a setting, like ``STATE_BUCKETS``: 200k pairs are a few MB on the
+# driver, far above any micro-batch, far below a bulk rebuild.
+DRIVER_CC_MAX_EDGES = 200_000
 
 
 def identifier_weight(col) -> "F.Column":
@@ -68,27 +83,85 @@ def _pointer_jump(m: DataFrame) -> DataFrame:
     )
 
 
-def connected_components(
-    edges: DataFrame,
-    src: str = "source",
-    dst: str = "target",
-    max_iterations: int = 50,
-    checkpoint: bool = True,
-) -> DataFrame:
-    """Star contraction (hash-to-min lineage): every node gets
-    component = min (lexicographic) reachable node id. Returns
-    (node, component).
+def _bounded_rows(df: DataFrame) -> list | None:
+    """Every row of ``df`` when it holds at most ``DRIVER_CC_MAX_EDGES``
+    rows, else None — one bounded action either way."""
+    rows = df.limit(DRIVER_CC_MAX_EDGES + 1).collect()
+    return rows if len(rows) <= DRIVER_CC_MAX_EDGES else None
 
-    Each level contracts every node into its min-neighbor label and
-    recurses on the (strictly shrinking) inter-label edge set, so the
-    full edge relation is shuffled only at level 0 — the levels after
-    that run on cluster-count-sized frames, which AQE coalesces and
-    auto-broadcasts. That matters twice: at 100 TB the per-level cost
-    decays geometrically instead of re-shuffling the world per round,
-    and locally a tiny pair graph converges in one or two cheap jobs
-    instead of diameter-many full-size iterations. ER merge graphs are
-    shallow (FIXTURES.md: clusters of 2-50), so levels ≈ 2-3; a pointer
-    jump per level keeps pathological chains at O(log) levels.
+
+def _min_label_union_find(pairs: Iterable[tuple]) -> dict:
+    """node -> min member id of its component, over undirected pairs.
+    The union hangs the larger root under the smaller, so every root is
+    its component's minimum.  Python orders ``str`` by code point, which
+    is Spark's UTF-8 binary order, and ints numerically, like longs — so
+    the labels equal the distributed path's."""
+    parent: dict = {}
+
+    def find(x):
+        root = x
+        while parent[root] != root:
+            root = parent[root]
+        while parent[x] != root:
+            parent[x], x = root, parent[x]
+        return root
+
+    for a, b in pairs:
+        parent.setdefault(a, a)
+        parent.setdefault(b, b)
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            if rb < ra:
+                ra, rb = rb, ra
+            parent[rb] = ra
+    return {x: find(x) for x in parent}
+
+
+def local_relation(
+    spark: SparkSession, rows: list, schema: StructType | str
+) -> DataFrame:
+    """``rows`` (sorted by the caller) as a one-partition local relation
+    of ``schema`` (a StructType or a DDL string).  Built from an Arrow
+    table, so it plans as a LocalTableScan: reading, collecting or
+    broadcasting it starts no Python worker, where a ``createDataFrame``
+    over a Python list is an RDD of pickled rows that every scan
+    unpickles in a Python worker.  One partition, so one output file
+    when written."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    arrow = to_arrow_schema(schema)
+    cols = list(zip(*rows)) if rows else [()] * len(arrow)
+    table = pa.Table.from_arrays(
+        [pa.array(list(c), type=f.type) for c, f in zip(cols, arrow)],
+        schema=arrow,
+    )
+    return spark.createDataFrame(table, schema).coalesce(1)
+
+
+def _id_schema(names: tuple[str, ...], dtype: DataType) -> StructType:
+    return StructType([StructField(n, dtype, True) for n in names])
+
+
+def connected_components(
+    edges: DataFrame, src: str = "source", dst: str = "target"
+) -> DataFrame:
+    """Every node gets component = min (lexicographic) reachable node
+    id.  Returns (node, component), typed like the endpoints.
+
+    Up to ``DRIVER_CC_MAX_EDGES`` non-null edges, a union-find on the
+    driver computes the labels (module docstring).  Above it, star
+    contraction (hash-to-min lineage): each level contracts every node
+    into its min-neighbor label and recurses on the (strictly
+    shrinking) inter-label edge set until it is empty, so the full edge
+    relation is shuffled only at level 0 — the levels after that run on
+    cluster-count-sized frames, which AQE coalesces and auto-broadcasts;
+    at 100 TB the per-level cost decays geometrically instead of
+    re-shuffling the world per round.  ER merge graphs are shallow
+    (FIXTURES.md: clusters of 2-50), so levels ≈ 2-3; a pointer jump
+    per level keeps pathological chains at O(log) levels.
 
     Deterministic and engine-independent: min-id labeling needs no tie
     rules. Use ``canonical_ids`` on top to pick the reference's
@@ -97,21 +170,23 @@ def connected_components(
     e = edges.select(F.col(src).alias("a"), F.col(dst).alias("b")).where(
         F.col("a").isNotNull() & F.col("b").isNotNull()
     )
+    rows = _bounded_rows(e)
+    if rows is not None:
+        labels = _min_label_union_find(rows)
+        return local_relation(
+            e.sparkSession, sorted(labels.items()),
+            _id_schema(("node", "component"), e.schema["a"].dataType),
+        )
     # Undirected: symmetrize once. Materialize — the edge set is read
     # several times below and its lineage may be an arbitrarily expensive
     # upstream pipeline (e.g. a similarity join).
-    sym = e.union(e.select(F.col("b").alias("a"), F.col("a").alias("b"))).distinct()
-    if checkpoint:
-        sym = sym.localCheckpoint(eager=True)
+    sym = e.union(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
+    sym = sym.distinct().localCheckpoint(eager=True)
 
     # Level 0 over the full graph: node-level label map, contracted edges.
     labels = _min_labels(sym)
-    g = _contract(sym, labels)
-    for _ in range(max_iterations):
-        if checkpoint:
-            g = g.localCheckpoint(eager=True)
-        if g.isEmpty():
-            break
+    g = _contract(sym, labels).localCheckpoint(eager=True)
+    while not g.isEmpty():
         # Contracted-level map (cluster-count-sized, not corpus-sized).
         m = _pointer_jump(_min_labels(g))
         # Fold the level's relabeling into the node-level composition.
@@ -119,7 +194,7 @@ def connected_components(
         labels = labels.join(step, "label", "left").select(
             "node", F.coalesce("_nl", "label").alias("label")
         )
-        g = _contract(g, m)
+        g = _contract(g, m).localCheckpoint(eager=True)
     return labels.select("node", F.col("label").alias("component"))
 
 
@@ -181,6 +256,18 @@ def fold_components_incremental(
     labels agree piecewise: the bounded rebuild is bit-identical to a
     from-scratch run over the live log (pytest-pinned in
     ``tests/test_media_index.py`` / ``tests/test_dedup_index.py``).
+
+    Driver path (module docstring): while the batch-sized sets fit under
+    ``DRIVER_CC_MAX_EDGES``, both cases are computed on the driver.  The
+    merge case collects the contraction rows (lid, rid, _lc, _rc) once,
+    runs the union-find over the contracted pairs, and relabels ``prev``
+    through a broadcast local relation of the labels that changed, plus
+    local rows for the endpoints whose map join missed.  The split case
+    collects the endpoints, the affected labels and their members (literal
+    filters on ``prev``) and relabels only the live pairs inside that
+    node set.  Each bounded collect that overflows falls back to the
+    distributed plan below, with identical labels
+    (``tests/test_components_driver.py`` pins both paths).
     """
     if changed is None:
         lmap = prev.select(
@@ -193,7 +280,11 @@ def fold_components_incremental(
             new_pairs.select("lid", "rid")
             .join(lmap, "lid", "left")
             .join(rmap, "rid", "left")
+            .select("lid", "rid", "_lc", "_rc")
         )
+        rows = _bounded_rows(cj)
+        if rows is not None:
+            return _merge_on_driver(prev, rows)
         contracted = cj.select(
             F.coalesce("_lc", "lid").alias("lid"),
             F.coalesce("_rc", "rid").alias("rid"),
@@ -238,8 +329,11 @@ def fold_components_incremental(
         changed.select(F.col(cid).alias("node"))
         .unionByName(new_pairs.select(F.col("lid").alias("node")))
         .unionByName(new_pairs.select(F.col("rid").alias("node")))
-        .distinct()
     )
+    split = _split_on_driver(prev, endpoints, merged_pairs)
+    if split is not None:
+        return split
+    endpoints = endpoints.distinct()
     affected = (
         prev.join(endpoints, "node", "semi").select("component").distinct()
     )
@@ -253,6 +347,86 @@ def fold_components_incremental(
     return unaffected.select("node", "component").unionByName(
         rebuilt.select("node", "component")
     )
+
+
+def _merge_on_driver(prev: DataFrame, rows: list) -> DataFrame:
+    """The merge case from the collected contraction rows (lid, rid,
+    _lc, _rc): union-find over the contracted pairs, then ``prev``
+    relabeled through the components whose label changed (a broadcast
+    join, no exchange) plus the rows of endpoints ``prev`` never held
+    (their map join missed)."""
+    rows = [r for r in rows if r[0] is not None and r[1] is not None]
+    labels = _min_label_union_find(
+        (l if lc is None else lc, r if rc is None else rc)
+        for l, r, lc, rc in rows
+    )
+    old = {c for _, _, lc, rc in rows for c in (lc, rc) if c is not None}
+    step = sorted((c, labels[c]) for c in old if labels[c] != c)
+    fresh = {l for l, _, lc, _ in rows if lc is None}
+    fresh |= {r for _, r, _, rc in rows if rc is None}
+    spark, dtype = prev.sparkSession, prev.schema["node"].dataType
+    out = prev.select("node", "component")
+    if step:
+        out = out.join(
+            F.broadcast(
+                local_relation(
+                    spark, step, _id_schema(("component", "_nc"), dtype)
+                )
+            ),
+            "component",
+            "left",
+        ).select("node", F.coalesce("_nc", "component").alias("component"))
+    if fresh:
+        out = out.unionByName(
+            local_relation(
+                spark, sorted((x, labels[x]) for x in fresh),
+                _id_schema(("node", "component"), dtype),
+            )
+        )
+    return _partitioned_like(prev, out)
+
+
+def _partitioned_like(prev: DataFrame, out: DataFrame) -> DataFrame:
+    """``out`` (``prev``'s partitions plus one local partition) merged
+    back into as many partitions as ``prev`` — a narrow coalesce, so the
+    maintained mapping's file count does not grow fold by fold."""
+    return out.coalesce(max(1, prev.rdd.getNumPartitions()))
+
+
+def _split_on_driver(
+    prev: DataFrame, endpoints: DataFrame, merged_pairs: DataFrame
+) -> DataFrame | None:
+    """The split case from driver sets, or None when one of them is over
+    the bound: the endpoints, the affected component labels and their
+    member nodes are each one bounded collect (literal ``isin`` filters
+    on ``prev``, no join); the rebuild edges are the live pairs whose
+    lid lies in the affected node set or is a new endpoint, and
+    ``connected_components`` relabels them (its own driver path)."""
+    ep = _bounded_rows(endpoints)
+    if ep is None:
+        return None
+    ep = {r[0] for r in ep if r[0] is not None}
+    if not ep:
+        return prev.select("node", "component")
+    hit = _bounded_rows(
+        prev.where(F.col("node").isin(sorted(ep))).select("component")
+    )
+    if hit is None:
+        return None
+    comps = sorted({r[0] for r in hit})
+    members = _bounded_rows(
+        prev.where(F.col("component").isin(comps)).select("node")
+    ) if comps else []
+    if members is None:
+        return None
+    area = sorted(ep | {r[0] for r in members})
+    rebuilt = connected_components(
+        merged_pairs.where(F.col("lid").isin(area)), src="lid", dst="rid"
+    )
+    unaffected = prev.select("node", "component")
+    if comps:
+        unaffected = unaffected.where(~F.col("component").isin(comps))
+    return _partitioned_like(prev, unaffected.unionByName(rebuilt))
 
 
 def canonical_ids(components: DataFrame) -> DataFrame:

@@ -26,25 +26,30 @@ the index is a materialised view maintained by key:
   endpoint, so retract-then-append is exact and a no-op for unchanged
   re-ingest).
 - ``components`` is maintained INCREMENTALLY
-  (``resolver/components.fold_components_incremental``): append-only
-  folds can only MERGE components — connected components over the
-  previous mapping compressed to stars (node → component edges) plus
-  only the batch's new pairs, O(state mapping + batch), the corpus is
-  never rescanned.  Exactness: the star graph has the same connected
-  partition as the full log (each component label is a member node),
-  so star ∪ new connects exactly what log ∪ new connects; and since a
-  component label is the MIN node id of its members, the min over a
-  merged star set equals the min over the merged log set — the
-  maintained labels are bit-identical to a from-scratch run
-  (pytest-pinned).  A changed-content upsert is the SPLIT case the
-  merge fold cannot express — the reference's G10 rule (deleted
-  positives force a rebuild of affected clusters,
+  (``resolver/components.fold_components_incremental``): an append-only
+  fold can only MERGE components.  The batch's new pairs are
+  contracted through the previous mapping (endpoint → its old
+  component; unseen endpoints ride as themselves), components are
+  computed over that batch-sized quotient graph alone, and the
+  previous mapping is relabeled through the components whose label
+  changed — O(batch) component work plus one map-side pass over the
+  mapping; the corpus is never rescanned.  Exactness: a component
+  label is the MIN node id of its members and a node of its own
+  component, so the quotient graph connects exactly what log ∪ new
+  connects and the min over a merged group's labels equals the min
+  over all its members — the maintained labels are bit-identical to a
+  from-scratch run (pytest-pinned).  A changed-content upsert is the
+  SPLIT case the merge fold cannot express — the reference's G10 rule
+  (deleted positives force a rebuild of affected clusters,
   ``/root/reference/nomenklatura/resolver/resolver.py:130-173``):
   only the components holding a changed id or a new-pair endpoint are
   re-derived from the retracted-and-refreshed log (the affected node
-  set is edge-closed; the helper's docstring has the argument).
+  set is edge-closed; the helper's docstring has the argument).  Both
+  cases run on the driver (one bounded collect, a union-find) while
+  the batch-sized graph is under ``DRIVER_CC_MAX_EDGES``, and as the
+  distributed star contraction above it.
   Replay-idempotent: refolding the same batch finds every signature
-  already in state, so retraction stands down and the star fold adds
+  already in state, so retraction stands down and the merge fold adds
   edges already implied.  ``delete`` is the deletion half of the same
   rule: outright removal retracts signatures + pairs and re-derives
   only the affected components — post-delete state equals a
@@ -70,12 +75,15 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from nomenklatura_spark.dedup.minhash import minhash_similarity
+from nomenklatura_spark.resolver.components import local_relation
 from nomenklatura_spark.streaming.state import (
     Bucketed,
     VersionedState,
     run_concurrently,
+    touching_buckets,
+    without_ids,
 )
-from nomenklatura_spark.dedup.minhash import minhash_similarity
 
 _SIG_SCHEMA = "id string, seed int, minhash long"
 _BAND_SCHEMA = "id string, band int, band_key string"
@@ -172,51 +180,44 @@ class DedupIndexState(VersionedState):
 
         state_sigs = self.signatures()
         state_bands = self.bands()
-        touched = batch_sigs.select("id").distinct()
         # split case (module docstring): ids re-ingested with a CHANGED
-        # signature must retract their stale pairs — compare the per-id
-        # signature vectors (touched-sized aggregate, tiny); unchanged
-        # re-ingest re-derives identical pairs so retraction stands
-        # down.  The first fold skips the machinery (version pointer
-        # read is free; nothing to retract against); later folds run
-        # the probe on the main thread UNDER the band materialization
-        # (the two are independent — §2.6).  ``touched_state`` — the
-        # state signature rows of re-ingested ids — witnesses overlap
-        # (empty for the steady-state append-only fold), feeds the
-        # changed probe AND names the buckets the bucketed writes must
-        # rewrite.
+        # signature must retract their stale pairs; unchanged re-ingest
+        # re-derives identical pairs so retraction stands down.  The
+        # first fold skips the machinery (version pointer read is free;
+        # nothing to retract against); later folds run the probe UNDER
+        # the band materialization (the two are independent — §2.6).
+        # The probe is ONE collect over the overlap ids — the state ids
+        # the batch re-ingests, none in the steady-state append-only
+        # fold: each state signature row joins the batch row of the same
+        # (id, seed) and carries its id's bucket and whether the minhash
+        # moved.  Every signature holds all ``n_hashes`` seeds, so an id
+        # is changed iff one of its rows moved.  The rows witness
+        # overlap, name the changed ids and the buckets the bucketed
+        # writes must rewrite.
         first = self.version() < 0
 
-        def _probe() -> tuple:
-            """(touched_state, has_overlap, changed, has_changed)"""
+        def _probe() -> list:
             if first:
-                return None, False, None, False
-            touched_state = state_sigs.join(
-                touched, "id", "semi"
-            ).localCheckpoint()
-            if touched_state.isEmpty():
-                return touched_state, False, None, False
-            sig_vec = F.sort_array(
-                F.collect_list(F.struct("seed", "minhash"))
+                return []
+            batch_side = batch_sigs.select(
+                "id", "seed", F.col("minhash").alias("_new")
             )
-            changed = (
-                touched_state.groupBy("id")
-                .agg(sig_vec.alias("_old"))
-                .join(
-                    batch_sigs.groupBy("id").agg(sig_vec.alias("_new")),
+            return (
+                state_sigs.join(F.broadcast(batch_side), ["id", "seed"])
+                .select(
                     "id",
+                    self._bucket_of(F.col("id")),
+                    F.col("minhash") != F.col("_new"),
                 )
-                .where(~F.col("_old").eqNullSafe(F.col("_new")))
-                .select("id")
+                .collect()
             )
-            if changed.isEmpty():
-                return touched_state, True, changed, False
-            return touched_state, True, changed.localCheckpoint(), True
 
         bands_plan = _bands_of(batch_sigs, self.band_size)
-        batch_bands, (touched_state, has_overlap, changed, has_changed) = (
-            run_concurrently(bands_plan.localCheckpoint, _probe)
+        batch_bands, probe_rows = run_concurrently(
+            bands_plan.localCheckpoint, _probe
         )
+        overlap_ids = sorted({r[0] for r in probe_rows})
+        changed_ids = sorted({r[0] for r in probe_rows if r[2]})
 
         # within-batch candidates: lsh_candidate_pairs over the one
         # checkpointed band pass (ADVICE r11: the batch path's own
@@ -245,7 +246,7 @@ class DedupIndexState(VersionedState):
                     F.col("id").alias("lid"), "band", "band_key"
                 )
                 .join(
-                    state_bands.join(touched, "id", "left_anti").select(
+                    without_ids(state_bands, overlap_ids, ("id",)).select(
                         F.col("id").alias("rid"), "band", "band_key"
                     ),
                     ["band", "band_key"],
@@ -256,8 +257,8 @@ class DedupIndexState(VersionedState):
                 )
                 .distinct()
             )
-            all_sigs = state_sigs.join(
-                touched, "id", "left_anti"
+            all_sigs = without_ids(
+                state_sigs, overlap_ids, ("id",)
             ).unionByName(batch_sigs)
             cands = within.unionByName(cross).distinct()
         new_pairs = (
@@ -271,7 +272,8 @@ class DedupIndexState(VersionedState):
         # writes, ``rb_*`` the buckets it rewrites (None = write all /
         # carry nothing, [] = pure append — every old bucket hardlinks).
         live_pairs = None
-        if first or not has_overlap:
+        changed = None
+        if first or not overlap_ids:
             # bootstrap, or the steady-state append-only fold: no state
             # row is retracted, and a new pair always has a batch-side
             # endpoint that was not in state, so it cannot collide with
@@ -289,66 +291,23 @@ class DedupIndexState(VersionedState):
             # the overlapping ids; for the pair log, the lid-buckets of
             # any pair (old or new) touching an overlapping id — an
             # old/new collision or a retraction can only involve those.
-            rb_ids = [
-                row[0]
-                for row in touched_state.select(
-                    self._bucket_of(F.col("id")).alias("_b")
-                )
-                .distinct()
-                .collect()
-            ]
-            sig_data = (
-                self._read_buckets("signatures", _SIG_SCHEMA, rb_ids)
-                .join(touched, "id", "left_anti")
-                .select("id", "seed", "minhash")
-                .unionByName(batch_sigs)
-            )
-            band_data = (
-                self._read_buckets("bands", _BAND_SCHEMA, rb_ids)
-                .join(touched, "id", "left_anti")
-                .select("id", "band", "band_key")
-                .unionByName(batch_bands)
-            )
-            overlap_ids = touched_state.select("id").distinct()
-            ovl = overlap_ids.select(F.col("id").alias("lid"))
-            ovr = overlap_ids.select(F.col("id").alias("rid"))
+            rb_ids = sorted({r[1] for r in probe_rows})
+            sig_data = without_ids(
+                self._read_buckets("signatures", _SIG_SCHEMA, rb_ids),
+                overlap_ids, ("id",),
+            ).unionByName(batch_sigs)
+            band_data = without_ids(
+                self._read_buckets("bands", _BAND_SCHEMA, rb_ids),
+                overlap_ids, ("id",),
+            ).unionByName(batch_bands)
             old_pairs = self.pairs()
-
-            def _touching_lids(pairs_df: DataFrame) -> DataFrame:
-                return (
-                    pairs_df.join(ovl, "lid", "semi")
-                    .select("lid")
-                    .unionByName(
-                        pairs_df.join(ovr, "rid", "semi").select("lid")
-                    )
-                )
-
-            rb_pairs = [
-                row[0]
-                for row in _touching_lids(old_pairs)
-                .unionByName(_touching_lids(new_pairs))
-                .select(self._bucket_of(F.col("lid")).alias("_b"))
-                .distinct()
-                .collect()
-            ]
-            old_rb = self._read_buckets("pairs", _PAIR_SCHEMA, rb_pairs)
-            if has_changed:
-                # retract every pair touching a changed id; the batch
-                # join has already re-derived the live ones (every pair
-                # with a batch-side endpoint), so retract-then-append
-                # is exact.  Changed ids overlap by definition, so all
-                # their pairs live in rewrite buckets.
-                old_rb = (
-                    old_rb.join(
-                        changed.select(F.col("id").alias("lid")), "lid",
-                        "left_anti",
-                    )
-                    .join(
-                        changed.select(F.col("id").alias("rid")), "rid",
-                        "left_anti",
-                    )
-                    .select("lid", "rid", "est_jaccard")
-                )
+            rb_pairs = touching_buckets(
+                self._bucket_of, overlap_ids, old_pairs, new_pairs
+            )
+            old_rb = without_ids(
+                self._read_buckets("pairs", _PAIR_SCHEMA, rb_pairs),
+                changed_ids,
+            )
             in_rb = (
                 self._bucket_of(F.col("lid")).isin(rb_pairs)
                 if rb_pairs
@@ -360,25 +319,24 @@ class DedupIndexState(VersionedState):
                 .agg(F.max("est_jaccard").alias("est_jaccard"))
                 .unionByName(new_pairs.where(~in_rb))
             )
-            if has_changed:
-                # the split-case component rebuild reads the FULL live
-                # log (every bucket, post-retraction) — a plan over the
+            if changed_ids:
+                # retract every pair touching a changed id (above: the
+                # changed ids overlap by definition, so all their pairs
+                # live in rewrite buckets); the batch join has already
+                # re-derived the live ones (every pair with a batch-side
+                # endpoint), so retract-then-append is exact.  The
+                # split-case component rebuild reads the FULL live log
+                # (every bucket, post-retraction) — a plan over the
                 # materialized state parquet + the new-pair checkpoint
-                live_pairs = (
-                    old_pairs.join(
-                        changed.select(F.col("id").alias("lid")), "lid",
-                        "left_anti",
-                    )
-                    .join(
-                        changed.select(F.col("id").alias("rid")), "rid",
-                        "left_anti",
-                    )
-                    .select("lid", "rid", "est_jaccard")
-                    .unionByName(new_pairs)
+                live_pairs = without_ids(old_pairs, changed_ids).unionByName(
+                    new_pairs
                 )
-        # incremental component fold: star-compression merge, or the
-        # bounded G10 split-case rebuild when signatures changed
-        # (module docstring has both exactness arguments)
+                changed = local_relation(
+                    self.spark, [(i,) for i in changed_ids], "id string"
+                )
+        # incremental component fold: contraction merge, or the bounded
+        # G10 split-case rebuild when signatures changed (module
+        # docstring has both exactness arguments)
         from nomenklatura_spark.resolver.components import (
             fold_components_incremental,
         )
@@ -389,8 +347,8 @@ class DedupIndexState(VersionedState):
         # so the fold wall is max(writes, CC + comps write), not the sum
         def _fold_comps() -> DataFrame:
             if first:
-                # empty previous mapping: the star union is empty, so
-                # the merge fold IS plain CC over the new pairs
+                # empty previous mapping: the fold IS plain CC over the
+                # new pairs
                 from nomenklatura_spark.resolver.components import (
                     connected_components,
                 )
@@ -402,7 +360,7 @@ class DedupIndexState(VersionedState):
                 self.components(),
                 new_pairs,
                 merged_pairs=live_pairs,
-                changed=changed if has_changed else None,
+                changed=changed,
             )
 
         self.commit(
@@ -436,69 +394,49 @@ class DedupIndexState(VersionedState):
             fold_components_incremental,
         )
 
-        gone = (
-            ids.select(F.col(ids.columns[0]).cast("string").alias("id"))
+        gone = sorted(
+            r[0]
+            for r in ids.select(
+                F.col(ids.columns[0]).cast("string").alias("id")
+            )
             .distinct()
-            .localCheckpoint()
+            .collect()
+            if r[0] is not None
         )
-        if gone.isEmpty():
+        if not gone:
             return
         # bucketed retraction: only the buckets holding a deleted id's
         # rows are rewritten (partition-pruned read of just those);
         # every other bucket hardlinks from v{N-1} (``_write_bucketed``)
-        gone_l = gone.select(F.col("id").alias("lid"))
-        gone_r = gone.select(F.col("id").alias("rid"))
-        rb_ids = [
-            row[0]
-            for row in self.signatures()
-            .join(gone, "id", "semi")
-            .select(self._bucket_of(F.col("id")).alias("_b"))
-            .distinct()
+        rb_ids = sorted({
+            r[0]
+            for r in self.signatures()
+            .where(F.col("id").isin(gone))
+            .select(self._bucket_of(F.col("id")))
             .collect()
-        ]
+        })
         old_pairs = self.pairs()
-        rb_pairs = [
-            row[0]
-            for row in old_pairs.join(gone_l, "lid", "semi")
-            .select("lid")
-            .unionByName(
-                old_pairs.join(gone_r, "rid", "semi").select("lid")
-            )
-            .select(self._bucket_of(F.col("lid")).alias("_b"))
-            .distinct()
-            .collect()
-        ]
-        sig_data = (
-            self._read_buckets("signatures", _SIG_SCHEMA, rb_ids)
-            .join(gone, "id", "left_anti")
-            .select("id", "seed", "minhash")
+        rb_pairs = touching_buckets(self._bucket_of, gone, old_pairs)
+        sig_data = without_ids(
+            self._read_buckets("signatures", _SIG_SCHEMA, rb_ids),
+            gone, ("id",),
         )
-        band_data = (
-            self._read_buckets("bands", _BAND_SCHEMA, rb_ids)
-            .join(gone, "id", "left_anti")
-            .select("id", "band", "band_key")
+        band_data = without_ids(
+            self._read_buckets("bands", _BAND_SCHEMA, rb_ids), gone, ("id",)
         )
-        pair_data = (
-            self._read_buckets("pairs", _PAIR_SCHEMA, rb_pairs)
-            .join(gone_l, "lid", "left_anti")
-            .join(gone_r, "rid", "left_anti")
-            # USING joins move the key column first — restore the
-            # relation's declared order before the snapshot write
-            .select("lid", "rid", "est_jaccard")
+        pair_data = without_ids(
+            self._read_buckets("pairs", _PAIR_SCHEMA, rb_pairs), gone
         )
         # the split-case component rebuild reads the FULL live log
-        live_pairs = (
-            old_pairs.join(gone_l, "lid", "left_anti")
-            .join(gone_r, "rid", "left_anti")
-            .select("lid", "rid", "est_jaccard")
-        )
         merged_comps = fold_components_incremental(
             self.components(),
             self.spark.createDataFrame([], _PAIR_SCHEMA).select(
                 "lid", "rid"
             ),
-            merged_pairs=live_pairs,
-            changed=gone,
+            merged_pairs=without_ids(old_pairs, gone),
+            changed=local_relation(
+                self.spark, [(i,) for i in gone], "id string"
+            ),
         )
         self.commit({
             "signatures": Bucketed(sig_data, "id", rb_ids),

@@ -24,9 +24,10 @@ maintained by key:
   live ones (the probe regenerates every pair with a batch-side
   endpoint, so retract-then-append is exact, and is a no-op for
   unchanged re-ingest).
-- ``components`` are maintained INCREMENTALLY: append-only folds use
-  the star-compression merge (pairs merge, never split; min-id labels
-  compose — ``streaming/dedup_index.py`` has the exactness argument).
+- ``components`` are maintained INCREMENTALLY: append-only folds
+  contract the batch pairs through the previous mapping and relabel it
+  (pairs merge, never split; min-id labels compose —
+  ``streaming/dedup_index.py`` has the exactness argument).
   A changed-content upsert is the SPLIT case the merge fold cannot
   express — the reference's G10 rule (deleted judgements force a
   rebuild of affected clusters,
@@ -78,10 +79,13 @@ from nomenklatura_spark.multimodal.dhash import (
     dhash_signatures,
     full_bucket_scan,
 )
+from nomenklatura_spark.resolver.components import local_relation
 from nomenklatura_spark.streaming.state import (
     Bucketed,
     VersionedState,
     run_concurrently,
+    touching_buckets,
+    without_ids,
 )
 
 _SIG_SCHEMA = "id long, blocks array<int>, dhash string"
@@ -160,10 +164,8 @@ class MediaDedupIndexState(VersionedState):
         bucket — O(batch) write cost per fold, not O(state) — and the
         merged-signature relation is no longer materialized at all (its
         only consumer is the probe join, which reads the state parquet
-        and the batch checkpoint directly).  Independent driver actions
-        overlap on a small pool (§2.6): the overlap probe runs beside
-        the batch-side histogram delta, and the changed-id probe beside
-        the merged-histogram checkpoint."""
+        and the batch checkpoint directly).  The overlap probe is one
+        collect, run beside the batch-side histogram delta (§2.6)."""
         if self._replayed(batch_id, scope):
             return self.spark.createDataFrame([], _PAIR_SCHEMA)
         # grid_h derives from n_blocks so the signatures this index
@@ -174,16 +176,12 @@ class MediaDedupIndexState(VersionedState):
             grid_h=self.n_blocks,
         ).localCheckpoint()
         state_sigs = self.signatures()
-        touched = batch_sigs.select("id").distinct()
         first = self.version() < 0
         batch_counts = band_bucket_counts(
             batch_sigs, self.band_bytes, self.n_blocks
         )
 
-        changed = None
-        has_changed = False
-        overlap = False
-        touched_state = None
+        probe_rows: list = []
         if first:
             # bootstrap fold (empty state): the anti-join signature
             # merge is the batch itself — and the batch is ALREADY
@@ -191,24 +189,44 @@ class MediaDedupIndexState(VersionedState):
             merged_sigs = batch_sigs
             merged_counts = batch_counts.localCheckpoint()
         else:
-            # The overlap probe (state signature rows of touched ids —
-            # the changed probe's input, the histogram retraction leg's
-            # input, and the rewrite-bucket source) is independent of
-            # the batch-side histogram delta: run the two actions
-            # concurrently (§2.6).  The delta is built OPTIMISTICALLY
-            # without the retraction leg — the steady-state fold has no
-            # overlap, so that delta is final; a re-ingest fold rebuilds
-            # it with the touched ids' old bands retracted.
-            def _overlap_probe() -> tuple:
-                ts = state_sigs.join(touched, "id", "semi").localCheckpoint()
-                return ts, not ts.isEmpty()
+            # The overlap probe — ONE collect of the state signature
+            # rows of touched ids, each with its bucket and whether the
+            # batch changed its dhash: the changed probe, the histogram
+            # retraction leg's input and the rewrite-bucket source — is
+            # independent of the batch-side histogram delta: run the
+            # two actions concurrently (§2.6).  The delta is built
+            # OPTIMISTICALLY without the retraction leg — the
+            # steady-state fold has no overlap, so that delta is final;
+            # a re-ingest fold rebuilds it with the touched ids' old
+            # bands retracted.
+            def _overlap_probe() -> list:
+                return (
+                    state_sigs.join(
+                        F.broadcast(
+                            batch_sigs.select(
+                                "id", F.col("dhash").alias("_new")
+                            )
+                        ),
+                        "id",
+                    )
+                    .select(
+                        "id", "blocks", "dhash",
+                        self._bucket_of(F.col("id")),
+                        ~F.col("dhash").eqNullSafe(F.col("_new")),
+                    )
+                    .collect()
+                )
 
-            (touched_state, overlap), delta = run_concurrently(
+            probe_rows, delta = run_concurrently(
                 _overlap_probe, batch_counts.localCheckpoint
             )
-            if overlap:
+            if probe_rows:
                 # retraction leg: counts only change through buckets
                 # the batch touches, so the delta stays batch-sized
+                by_id = {r[0]: r[:3] for r in probe_rows}
+                touched_state = local_relation(
+                    self.spark, [by_id[i] for i in sorted(by_id)], _SIG_SCHEMA
+                )
                 delta = (
                     batch_counts.unionByName(
                         band_bucket_counts(
@@ -227,8 +245,7 @@ class MediaDedupIndexState(VersionedState):
             # can't build their preserved side, hence the semi + re-sum
             # shape).  The merged histogram feeds the fold's
             # BATCH-bounded skew scan (probe_bucket_scan) and the
-            # snapshot.  Its checkpoint is independent of the
-            # changed-id probe — run the two concurrently (§2.6).
+            # snapshot.
             prev_counts = self.band_counts()
             delta_keys = F.broadcast(
                 delta.select("band_no", "band_val")
@@ -242,40 +259,26 @@ class MediaDedupIndexState(VersionedState):
                 .agg(F.sum("n").alias("n"))
                 .where(F.col("n") > 0)
             )
-            merged_counts_plan = prev_counts.join(
-                delta_keys, ["band_no", "band_val"], "left_anti"
-            ).unionByName(updated)
-            def _changed_probe() -> tuple:
-                """(changed, has_changed)"""
-                if not overlap:
-                    return None, False
-                # split case (module docstring): ids re-ingested with a
-                # CHANGED signature must retract their stale pairs —
-                # unchanged re-ingest re-derives identical pairs, so the
-                # retraction stands down and the fold stays merge-only
-                # (touched-sized join, tiny)
-                changed = (
-                    touched_state.select("id", F.col("dhash").alias("_old"))
-                    .join(
-                        batch_sigs.select("id", F.col("dhash").alias("_new")),
-                        "id",
-                    )
-                    .where(~F.col("_old").eqNullSafe(F.col("_new")))
-                    .select("id")
+            merged_counts = (
+                prev_counts.join(
+                    delta_keys, ["band_no", "band_val"], "left_anti"
                 )
-                if changed.isEmpty():
-                    return changed, False
-                return changed.localCheckpoint(), True
-
-            merged_counts, (changed, has_changed) = run_concurrently(
-                merged_counts_plan.localCheckpoint, _changed_probe
+                .unionByName(updated)
+                .localCheckpoint()
             )
+        overlap_ids = sorted({r[0] for r in probe_rows})
+        changed_ids = sorted({r[0] for r in probe_rows if r[4]})
+        if not first:
             # the probe join's state side: a PLAN over the state
             # parquet + the batch checkpoint — never materialized (r12;
             # its only consumer is the one banded join below, and the
-            # bucketed writes no longer need the merged relation)
+            # bucketed writes no longer need the merged relation).  An
+            # anti-join, not a literal filter on ``overlap_ids``: its
+            # exchange gives AQE the runtime size that lets the banded
+            # join broadcast (a filter raised this fold's shuffle from
+            # 22 to 54 KB on the ingest benchmark)
             merged_sigs = state_sigs.join(
-                touched, "id", "left_anti"
+                batch_sigs.select("id").distinct(), "id", "left_anti"
             ).unionByName(batch_sigs)
 
         # candidates: batch self-pairs + batch vs state, via the probe
@@ -299,64 +302,28 @@ class MediaDedupIndexState(VersionedState):
         # pair; dhash_pairs output is (lid, rid)-unique); a re-ingest
         # fold rewrites only the buckets holding retracted rows
         live_pairs = None
-        if first or not overlap:
+        changed = None
+        if first or not overlap_ids:
             rb_ids: list[int] | None = None if first else []
             rb_pairs: list[int] | None = None if first else []
             sig_data, pair_data = batch_sigs, new_pairs
         else:
-            rb_ids = [
-                row[0]
-                for row in touched_state.select(
-                    self._bucket_of(F.col("id")).alias("_b")
-                )
-                .distinct()
-                .collect()
-            ]
-            sig_data = (
-                self._read_buckets("signatures", _SIG_SCHEMA, rb_ids)
-                .join(touched, "id", "left_anti")
-                .select("id", "blocks", "dhash")
-                .unionByName(batch_sigs)
-            )
-            overlap_ids = touched_state.select("id").distinct()
-            ovl = overlap_ids.select(F.col("id").alias("lid"))
-            ovr = overlap_ids.select(F.col("id").alias("rid"))
+            rb_ids = sorted({r[3] for r in probe_rows})
+            sig_data = without_ids(
+                self._read_buckets("signatures", _SIG_SCHEMA, rb_ids),
+                overlap_ids, ("id",),
+            ).unionByName(batch_sigs)
             old_pairs = self.pairs()
-
-            def _touching_lids(pairs_df: DataFrame) -> DataFrame:
-                return (
-                    pairs_df.join(ovl, "lid", "semi")
-                    .select("lid")
-                    .unionByName(
-                        pairs_df.join(ovr, "rid", "semi").select("lid")
-                    )
-                )
-
-            rb_pairs = [
-                row[0]
-                for row in _touching_lids(old_pairs)
-                .unionByName(_touching_lids(new_pairs))
-                .select(self._bucket_of(F.col("lid")).alias("_b"))
-                .distinct()
-                .collect()
-            ]
-            old_rb = self._read_buckets("pairs", _PAIR_SCHEMA, rb_pairs)
-            if has_changed:
-                # retract every pair touching a changed id; the probe
-                # has already re-derived the live ones (every pair with
-                # a batch-side endpoint), so retract-then-append is
-                # exact
-                old_rb = (
-                    old_rb.join(
-                        changed.select(F.col("id").alias("lid")), "lid",
-                        "left_anti",
-                    )
-                    .join(
-                        changed.select(F.col("id").alias("rid")), "rid",
-                        "left_anti",
-                    )
-                    .select("lid", "rid", "hamming")
-                )
+            rb_pairs = touching_buckets(
+                self._bucket_of, overlap_ids, old_pairs, new_pairs
+            )
+            # retract every pair touching a changed id; the probe has
+            # already re-derived the live ones (every pair with a
+            # batch-side endpoint), so retract-then-append is exact
+            old_rb = without_ids(
+                self._read_buckets("pairs", _PAIR_SCHEMA, rb_pairs),
+                changed_ids,
+            )
             in_rb = (
                 self._bucket_of(F.col("lid")).isin(rb_pairs)
                 if rb_pairs
@@ -368,21 +335,15 @@ class MediaDedupIndexState(VersionedState):
                 .agg(F.min("hamming").alias("hamming"))
                 .unionByName(new_pairs.where(~in_rb))
             )
-            if has_changed:
+            if changed_ids:
                 # the split-case component rebuild reads the FULL live
                 # log — a plan over the state parquet + the new-pair
                 # checkpoint
-                live_pairs = (
-                    old_pairs.join(
-                        changed.select(F.col("id").alias("lid")), "lid",
-                        "left_anti",
-                    )
-                    .join(
-                        changed.select(F.col("id").alias("rid")), "rid",
-                        "left_anti",
-                    )
-                    .select("lid", "rid", "hamming")
-                    .unionByName(new_pairs)
+                live_pairs = without_ids(old_pairs, changed_ids).unionByName(
+                    new_pairs
+                )
+                changed = local_relation(
+                    self.spark, [(i,) for i in changed_ids], "id long"
                 )
         from nomenklatura_spark.resolver.components import (
             fold_components_incremental,
@@ -394,8 +355,8 @@ class MediaDedupIndexState(VersionedState):
         # max(writes, CC + comps write), not the sum
         def _fold_comps() -> DataFrame:
             if first:
-                # empty previous mapping: the star union is empty, so
-                # the merge fold IS plain CC over the new pairs
+                # empty previous mapping: the fold IS plain CC over the
+                # new pairs
                 from nomenklatura_spark.resolver.components import (
                     connected_components,
                 )
@@ -407,7 +368,7 @@ class MediaDedupIndexState(VersionedState):
                 self.components(),
                 new_pairs,
                 merged_pairs=live_pairs,
-                changed=changed if has_changed else None,
+                changed=changed,
             )
 
         self.commit(
@@ -438,18 +399,20 @@ class MediaDedupIndexState(VersionedState):
             fold_components_incremental,
         )
 
-        gone = (
-            ids.select(F.col(ids.columns[0]).cast("long").alias("id"))
+        gone = sorted(
+            r[0]
+            for r in ids.select(
+                F.col(ids.columns[0]).cast("long").alias("id")
+            )
             .distinct()
-            .localCheckpoint()
+            .collect()
+            if r[0] is not None
         )
-        if gone.isEmpty():
+        if not gone:
             return
-        state_sigs = self.signatures()
+        gone_sigs = self.signatures().where(F.col("id").isin(gone))
         gone_counts = band_bucket_counts(
-            state_sigs.join(gone, "id", "semi"),
-            self.band_bytes,
-            self.n_blocks,
+            gone_sigs, self.band_bytes, self.n_blocks
         ).localCheckpoint()
         prev_counts = self.band_counts()
         merged_counts = (
@@ -471,53 +434,29 @@ class MediaDedupIndexState(VersionedState):
         )
         # bucketed retraction: only the buckets holding a deleted id's
         # rows are rewritten; the rest hardlink (``_write_bucketed``)
-        gone_l = gone.select(F.col("id").alias("lid"))
-        gone_r = gone.select(F.col("id").alias("rid"))
-        rb_ids = [
-            row[0]
-            for row in state_sigs.join(gone, "id", "semi")
-            .select(self._bucket_of(F.col("id")).alias("_b"))
-            .distinct()
-            .collect()
-        ]
+        rb_ids = sorted({
+            r[0]
+            for r in gone_sigs.select(self._bucket_of(F.col("id"))).collect()
+        })
         old_pairs = self.pairs()
-        rb_pairs = [
-            row[0]
-            for row in old_pairs.join(gone_l, "lid", "semi")
-            .select("lid")
-            .unionByName(
-                old_pairs.join(gone_r, "rid", "semi").select("lid")
-            )
-            .select(self._bucket_of(F.col("lid")).alias("_b"))
-            .distinct()
-            .collect()
-        ]
-        sig_data = (
-            self._read_buckets("signatures", _SIG_SCHEMA, rb_ids)
-            .join(gone, "id", "left_anti")
-            .select("id", "blocks", "dhash")
+        rb_pairs = touching_buckets(self._bucket_of, gone, old_pairs)
+        sig_data = without_ids(
+            self._read_buckets("signatures", _SIG_SCHEMA, rb_ids),
+            gone, ("id",),
         )
-        pair_data = (
-            self._read_buckets("pairs", _PAIR_SCHEMA, rb_pairs)
-            .join(gone_l, "lid", "left_anti")
-            .join(gone_r, "rid", "left_anti")
-            # USING joins move the key column first — restore the
-            # relation's declared order before the snapshot write
-            .select("lid", "rid", "hamming")
+        pair_data = without_ids(
+            self._read_buckets("pairs", _PAIR_SCHEMA, rb_pairs), gone
         )
         # the split-case component rebuild reads the FULL live log
-        live_pairs = (
-            old_pairs.join(gone_l, "lid", "left_anti")
-            .join(gone_r, "rid", "left_anti")
-            .select("lid", "rid", "hamming")
-        )
         merged_comps = fold_components_incremental(
             self.components(),
             self.spark.createDataFrame([], _PAIR_SCHEMA).select(
                 "lid", "rid"
             ),
-            merged_pairs=live_pairs,
-            changed=gone,
+            merged_pairs=without_ids(old_pairs, gone),
+            changed=local_relation(
+                self.spark, [(i,) for i in gone], "id long"
+            ),
         )
         self.commit({
             "signatures": Bucketed(sig_data, "id", rb_ids),

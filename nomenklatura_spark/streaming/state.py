@@ -32,9 +32,10 @@ import shutil
 import warnings
 from collections.abc import Callable, Mapping
 from concurrent.futures import ThreadPoolExecutor
-from functools import partial
+from functools import partial, reduce
 from typing import Any, NamedTuple
 
+from pyspark import SparkContext
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.streaming import StreamingQuery
 
@@ -46,15 +47,52 @@ from pyspark.sql.streaming import StreamingQuery
 STATE_BUCKETS = 16
 
 
+# Local properties a pool thread inherits from its caller, so the jobs
+# it submits carry the caller's tags: job group, description,
+# interrupt-on-cancel, scheduler pool, job tags, and the package's own
+# ``nk.*`` keys.  Never ``spark.sql.execution.id``: it names one query
+# execution, and a fold that runs inside one (``maintain_stream``'s
+# ``foreachBatch``) must not stamp it on the jobs its threads submit.
+_INHERITED_PROPERTIES = frozenset({
+    "spark.jobGroup.id",
+    "spark.job.description",
+    "spark.job.interruptOnCancel",
+    "spark.scheduler.pool",
+    "spark.job.tags",
+})
+
+
+def _caller_properties() -> dict[str, str]:
+    sc = SparkContext._active_spark_context
+    if sc is None:
+        return {}
+    props = sc._jsc.sc().getLocalProperties()
+    return {
+        k: props.getProperty(k)
+        for k in props.stringPropertyNames()
+        if k in _INHERITED_PROPERTIES or k.startswith("nk.")
+    }
+
+
 def run_concurrently(*thunks: Callable[[], Any]) -> list:
     """Run independent driver-side Spark actions side by side, one
     thread each, and return their results in order; a single thunk runs
-    on the calling thread.  Every thunk finishes before the first
-    failure is re-raised."""
+    on the calling thread.  Each thread starts with the caller's tags
+    (``_INHERITED_PROPERTIES`` and ``nk.*``).  Every thunk finishes
+    before the first failure is re-raised."""
     if len(thunks) == 1:
         return [thunks[0]()]
+    props = _caller_properties()
+
+    def tagged(thunk: Callable[[], Any]) -> Any:
+        if props:
+            sc = SparkContext._active_spark_context
+            for k, v in props.items():
+                sc.setLocalProperty(k, v)
+        return thunk()
+
     with ThreadPoolExecutor(max_workers=len(thunks)) as pool:
-        futures = [pool.submit(t) for t in thunks]
+        futures = [pool.submit(tagged, t) for t in thunks]
         return [f.result() for f in futures]
 
 
@@ -66,6 +104,34 @@ class Bucketed(NamedTuple):
     data: DataFrame
     key: str
     rewrite_buckets: list[int] | None
+
+
+def without_ids(
+    df: DataFrame, ids: list, cols: tuple[str, ...] = ("lid", "rid")
+) -> DataFrame:
+    """``df`` minus every row whose ``cols`` hold one of the driver-side
+    ``ids`` — by default a pair log minus every pair touching them (the
+    retraction of a dedup fold).  A literal filter, no join."""
+    if not ids:
+        return df
+    keep = ~F.col(cols[0]).isin(ids)
+    for c in cols[1:]:
+        keep = keep & ~F.col(c).isin(ids)
+    return df.where(keep)
+
+
+def touching_buckets(
+    bucket_of: Callable[["F.Column"], "F.Column"],
+    ids: list,
+    *pair_logs: DataFrame,
+) -> list[int]:
+    """The lid-buckets of every pair in ``pair_logs`` that touches one
+    of ``ids`` — the pair-log buckets a dedup fold must rewrite.  One
+    collect with no exchange: the id list is a literal filter and the
+    buckets are deduplicated on the driver."""
+    touch = F.col("lid").isin(ids) | F.col("rid").isin(ids)
+    scans = [p.where(touch).select(bucket_of(F.col("lid"))) for p in pair_logs]
+    return sorted({r[0] for r in reduce(DataFrame.union, scans).collect()})
 
 
 class VersionedState:

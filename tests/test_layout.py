@@ -330,9 +330,10 @@ def test_headline_plan_shapes_bounded(spark, sf_dir):
     lineage inside InMemoryTableScan, so memoized queries' string counts
     swing with cache state; the queries pinned here are stable in any
     test order.  (dedup_survivors does read the plan_cache'd ngram-pair
-    relation, but connected_components eagerly localCheckpoints it, so
-    the cached lineage is truncated out of the final plan dump — if the
-    checkpoint is ever removed, drop the row from this net.)
+    relation, but connected_components collects it into a local
+    relation (driver path) or eagerly localCheckpoints it, so the cached
+    lineage is truncated out of the final plan dump — if both are ever
+    removed, drop the row from this net.)
     What the net catches is a change that introduces extra shuffles —
     invisible at test scale, multiplicative at cluster scale.
 
