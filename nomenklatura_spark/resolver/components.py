@@ -8,14 +8,18 @@ under the identifier ordering (weight, id) — plain ids < ``NK-`` canonicals
 Implementation: every component is labeled with its minimum member id,
 computed one of two ways with bit-identical labels.
 
-- Bounded driver path: one ``limit(DRIVER_CC_MAX_EDGES + 1)`` collect of
-  the edge list; at or below the bound a union-find on the driver
+- Bounded driver path: one collect of at most ``DRIVER_CC_MAX_EDGES + 1``
+  rows of the edge list, read through a lazy local checkpoint of it
+  (``_bounded_rows``); at or below the bound a union-find on the driver
   labels the components and the mapping returns as a one-partition
   local relation.  A micro-batch's (contracted) pair graph always fits,
   and there the per-round cost of a distributed formulation is pure
   job-scheduling overhead: every contraction level pays a checkpoint,
   an emptiness probe and one job per shuffle.
-- Distributed path, above the bound: large-star/small-star-style star
+- Distributed path, above the bound: the collect stops after the first
+  ``DRIVER_CC_MAX_EDGES + 1`` rows and Spark completes the checkpoint,
+  so the edge list's upstream plan still runs once and the contraction
+  reads the checkpoint.  Large-star/small-star-style star
   contraction on DataFrames (the standard Spark CC formulation from the
   "Connected Components in MapReduce and Beyond" paper lineage,
   simplified to repeated min-neighbor joins with AQE handling skew).
@@ -28,12 +32,24 @@ from __future__ import annotations
 
 from collections.abc import Iterable
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import DataType, StructField, StructType
 
+from nomenklatura_spark.operators.id_sets import (
+    local_relation,
+    with_ids,
+    without_ids,
+)
+
 # Edge-count bound of the driver path (module docstring).  A constant,
-# not a setting, like ``STATE_BUCKETS``: 200k pairs are a few MB on the
-# driver, far above any micro-batch, far below a bulk rebuild.
+# not a setting, like ``STATE_BUCKETS``.  Measured on a 4-core VM
+# (local[4], clustered string-id graphs read from parquet, median of 3
+# warm runs): the driver path takes 0.27 / 0.56 / 1.05 / 3.55 / 14.0 s
+# at 1k / 10k / 50k / 200k / 1M edges, the star contraction 2.7 / 3.6 /
+# 5.0 / 9.8 / 37.1 s.  On one machine the driver path wins at every size
+# measured, so the bound is set by driver memory, whose work a cluster
+# cannot spread: the Python driver's peak RSS grows by ~120 MB at 200k
+# edges and by ~580 MB at 1M.
 DRIVER_CC_MAX_EDGES = 200_000
 
 
@@ -83,11 +99,20 @@ def _pointer_jump(m: DataFrame) -> DataFrame:
     )
 
 
-def _bounded_rows(df: DataFrame) -> list | None:
-    """Every row of ``df`` when it holds at most ``DRIVER_CC_MAX_EDGES``
-    rows, else None — one bounded action either way."""
-    rows = df.limit(DRIVER_CC_MAX_EDGES + 1).collect()
-    return rows if len(rows) <= DRIVER_CC_MAX_EDGES else None
+def _bounded_rows(df: DataFrame) -> tuple[list | None, DataFrame]:
+    """(rows, checkpoint of ``df``): ``rows`` is every row of ``df``
+    when it holds at most ``DRIVER_CC_MAX_EDGES`` rows, else None.
+
+    One action either way, and ``df``'s plan runs once: the collect
+    reads a lazy ``localCheckpoint`` of ``df`` through one partition
+    and stops after ``DRIVER_CC_MAX_EDGES + 1`` rows.  Every partition
+    it reads is stored in full, and when it stops early Spark computes
+    the partitions it did not reach (the checkpoint's own job), so the
+    returned checkpoint lets the distributed path reuse ``df`` without
+    running its upstream again."""
+    ck = df.localCheckpoint(eager=False)
+    rows = ck.coalesce(1).limit(DRIVER_CC_MAX_EDGES + 1).collect()
+    return (rows if len(rows) <= DRIVER_CC_MAX_EDGES else None), ck
 
 
 def _min_label_union_find(pairs: Iterable[tuple]) -> dict:
@@ -115,30 +140,6 @@ def _min_label_union_find(pairs: Iterable[tuple]) -> dict:
                 ra, rb = rb, ra
             parent[rb] = ra
     return {x: find(x) for x in parent}
-
-
-def local_relation(
-    spark: SparkSession, rows: list, schema: StructType | str
-) -> DataFrame:
-    """``rows`` (sorted by the caller) as a one-partition local relation
-    of ``schema`` (a StructType or a DDL string).  Built from an Arrow
-    table, so it plans as a LocalTableScan: reading, collecting or
-    broadcasting it starts no Python worker, where a ``createDataFrame``
-    over a Python list is an RDD of pickled rows that every scan
-    unpickles in a Python worker.  One partition, so one output file
-    when written."""
-    import pyarrow as pa
-    from pyspark.sql.pandas.types import to_arrow_schema
-
-    if isinstance(schema, str):
-        schema = StructType.fromDDL(schema)
-    arrow = to_arrow_schema(schema)
-    cols = list(zip(*rows)) if rows else [()] * len(arrow)
-    table = pa.Table.from_arrays(
-        [pa.array(list(c), type=f.type) for c, f in zip(cols, arrow)],
-        schema=arrow,
-    )
-    return spark.createDataFrame(table, schema).coalesce(1)
 
 
 def _id_schema(names: tuple[str, ...], dtype: DataType) -> StructType:
@@ -170,7 +171,7 @@ def connected_components(
     e = edges.select(F.col(src).alias("a"), F.col(dst).alias("b")).where(
         F.col("a").isNotNull() & F.col("b").isNotNull()
     )
-    rows = _bounded_rows(e)
+    rows, e = _bounded_rows(e)
     if rows is not None:
         labels = _min_label_union_find(rows)
         return local_relation(
@@ -263,11 +264,15 @@ def fold_components_incremental(
     runs the union-find over the contracted pairs, and relabels ``prev``
     through a broadcast local relation of the labels that changed, plus
     local rows for the endpoints whose map join missed.  The split case
-    collects the endpoints, the affected labels and their members (literal
-    filters on ``prev``) and relabels only the live pairs inside that
-    node set.  Each bounded collect that overflows falls back to the
-    distributed plan below, with identical labels
-    (``tests/test_components_driver.py`` pins both paths).
+    collects the endpoints, the affected labels and their members
+    (``prev`` filtered by ``with_ids``) and relabels only the live pairs
+    inside that node set.  Each bounded collect that overflows falls
+    back to the distributed plan below, with identical labels
+    (``tests/test_components_driver.py`` pins both paths).  The
+    fallback reads the contraction rows and the endpoints from the
+    checkpoints their collects left, so their plans run once; an
+    overflowing collect of the affected labels or members has cost one
+    extra filtered scan of ``prev``.
     """
     if changed is None:
         lmap = prev.select(
@@ -282,7 +287,7 @@ def fold_components_incremental(
             .join(rmap, "rid", "left")
             .select("lid", "rid", "_lc", "_rc")
         )
-        rows = _bounded_rows(cj)
+        rows, cj = _bounded_rows(cj)
         if rows is not None:
             return _merge_on_driver(prev, rows)
         contracted = cj.select(
@@ -330,7 +335,8 @@ def fold_components_incremental(
         .unionByName(new_pairs.select(F.col("lid").alias("node")))
         .unionByName(new_pairs.select(F.col("rid").alias("node")))
     )
-    split = _split_on_driver(prev, endpoints, merged_pairs)
+    ep, endpoints = _bounded_rows(endpoints)
+    split = None if ep is None else _split_on_driver(prev, ep, merged_pairs)
     if split is not None:
         return split
     endpoints = endpoints.distinct()
@@ -394,38 +400,36 @@ def _partitioned_like(prev: DataFrame, out: DataFrame) -> DataFrame:
 
 
 def _split_on_driver(
-    prev: DataFrame, endpoints: DataFrame, merged_pairs: DataFrame
+    prev: DataFrame, endpoints: list, merged_pairs: DataFrame
 ) -> DataFrame | None:
     """The split case from driver sets, or None when one of them is over
-    the bound: the endpoints, the affected component labels and their
-    member nodes are each one bounded collect (literal ``isin`` filters
-    on ``prev``, no join); the rebuild edges are the live pairs whose
-    lid lies in the affected node set or is a new endpoint, and
-    ``connected_components`` relabels them (its own driver path)."""
-    ep = _bounded_rows(endpoints)
-    if ep is None:
-        return None
-    ep = {r[0] for r in ep if r[0] is not None}
+    the bound.  ``endpoints`` are the collected endpoint rows; the
+    affected component labels and their member nodes are each one more
+    bounded collect of ``prev`` filtered by the set before (``with_ids``);
+    the rebuild edges are the live pairs whose lid lies in the affected
+    node set or is a new endpoint, and ``connected_components`` relabels
+    them (its own driver path)."""
+    ep = {r[0] for r in endpoints if r[0] is not None}
     if not ep:
         return prev.select("node", "component")
-    hit = _bounded_rows(
-        prev.where(F.col("node").isin(sorted(ep))).select("component")
-    )
+    hit, _ = _bounded_rows(with_ids(prev, sorted(ep), "node").select("component"))
     if hit is None:
         return None
     comps = sorted({r[0] for r in hit})
-    members = _bounded_rows(
-        prev.where(F.col("component").isin(comps)).select("node")
-    ) if comps else []
+    members: list | None = []
+    if comps:
+        members, _ = _bounded_rows(
+            with_ids(prev, comps, "component").select("node")
+        )
     if members is None:
         return None
     area = sorted(ep | {r[0] for r in members})
     rebuilt = connected_components(
-        merged_pairs.where(F.col("lid").isin(area)), src="lid", dst="rid"
+        with_ids(merged_pairs, area, "lid"), src="lid", dst="rid"
     )
-    unaffected = prev.select("node", "component")
-    if comps:
-        unaffected = unaffected.where(~F.col("component").isin(comps))
+    unaffected = without_ids(
+        prev.select("node", "component"), comps, ("component",)
+    )
     return _partitioned_like(prev, unaffected.unionByName(rebuilt))
 
 

@@ -76,13 +76,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from nomenklatura_spark.dedup.minhash import minhash_similarity
-from nomenklatura_spark.resolver.components import local_relation
+from nomenklatura_spark.operators.id_sets import (
+    local_relation,
+    touching_buckets,
+    without_ids,
+)
 from nomenklatura_spark.streaming.state import (
     Bucketed,
     VersionedState,
     run_concurrently,
-    touching_buckets,
-    without_ids,
 )
 
 _SIG_SCHEMA = "id string, seed int, minhash long"
@@ -186,14 +188,14 @@ class DedupIndexState(VersionedState):
         # first fold skips the machinery (version pointer read is free;
         # nothing to retract against); later folds run the probe UNDER
         # the band materialization (the two are independent — §2.6).
-        # The probe is ONE collect over the overlap ids — the state ids
-        # the batch re-ingests, none in the steady-state append-only
+        # The probe is ONE collect of one row per overlap id — the state
+        # ids the batch re-ingests, none in the steady-state append-only
         # fold: each state signature row joins the batch row of the same
-        # (id, seed) and carries its id's bucket and whether the minhash
-        # moved.  Every signature holds all ``n_hashes`` seeds, so an id
-        # is changed iff one of its rows moved.  The rows witness
-        # overlap, name the changed ids and the buckets the bucketed
-        # writes must rewrite.
+        # (id, seed), and the rows of one id fold into its bucket and
+        # whether any minhash moved (every signature holds all
+        # ``n_hashes`` seeds, so an id is changed iff one of its rows
+        # moved).  The rows witness overlap, name the changed ids and
+        # the buckets the bucketed writes must rewrite.
         first = self.version() < 0
 
         def _probe() -> list:
@@ -204,11 +206,9 @@ class DedupIndexState(VersionedState):
             )
             return (
                 state_sigs.join(F.broadcast(batch_side), ["id", "seed"])
-                .select(
-                    "id",
-                    self._bucket_of(F.col("id")),
-                    F.col("minhash") != F.col("_new"),
-                )
+                .groupBy("id")
+                .agg(F.max(F.col("minhash") != F.col("_new")).alias("_moved"))
+                .select("id", self._bucket_of(F.col("id")), "_moved")
                 .collect()
             )
 
@@ -216,8 +216,8 @@ class DedupIndexState(VersionedState):
         batch_bands, probe_rows = run_concurrently(
             bands_plan.localCheckpoint, _probe
         )
-        overlap_ids = sorted({r[0] for r in probe_rows})
-        changed_ids = sorted({r[0] for r in probe_rows if r[2]})
+        overlap_ids = sorted(r[0] for r in probe_rows)
+        changed_ids = sorted(r[0] for r in probe_rows if r[2])
 
         # within-batch candidates: lsh_candidate_pairs over the one
         # checkpointed band pass (ADVICE r11: the batch path's own
@@ -408,13 +408,9 @@ class DedupIndexState(VersionedState):
         # bucketed retraction: only the buckets holding a deleted id's
         # rows are rewritten (partition-pruned read of just those);
         # every other bucket hardlinks from v{N-1} (``_write_bucketed``)
-        rb_ids = sorted({
-            r[0]
-            for r in self.signatures()
-            .where(F.col("id").isin(gone))
-            .select(self._bucket_of(F.col("id")))
-            .collect()
-        })
+        rb_ids = touching_buckets(
+            self._bucket_of, gone, self.signatures(), cols=("id",), key="id"
+        )
         old_pairs = self.pairs()
         rb_pairs = touching_buckets(self._bucket_of, gone, old_pairs)
         sig_data = without_ids(

@@ -79,13 +79,16 @@ from nomenklatura_spark.multimodal.dhash import (
     dhash_signatures,
     full_bucket_scan,
 )
-from nomenklatura_spark.resolver.components import local_relation
+from nomenklatura_spark.operators.id_sets import (
+    local_relation,
+    touching_buckets,
+    with_ids,
+    without_ids,
+)
 from nomenklatura_spark.streaming.state import (
     Bucketed,
     VersionedState,
     run_concurrently,
-    touching_buckets,
-    without_ids,
 )
 
 _SIG_SCHEMA = "id long, blocks array<int>, dhash string"
@@ -189,10 +192,10 @@ class MediaDedupIndexState(VersionedState):
             merged_sigs = batch_sigs
             merged_counts = batch_counts.localCheckpoint()
         else:
-            # The overlap probe — ONE collect of the state signature
-            # rows of touched ids, each with its bucket and whether the
-            # batch changed its dhash: the changed probe, the histogram
-            # retraction leg's input and the rewrite-bucket source — is
+            # The overlap probe — ONE collect of one row per touched
+            # state id: its bucket and whether the batch changed its
+            # dhash, so the changed probe, the overlap ids and the
+            # rewrite-bucket source — is
             # independent of the batch-side histogram delta: run the
             # two actions concurrently (§2.6).  The delta is built
             # OPTIMISTICALLY without the retraction leg — the
@@ -210,7 +213,7 @@ class MediaDedupIndexState(VersionedState):
                         "id",
                     )
                     .select(
-                        "id", "blocks", "dhash",
+                        "id",
                         self._bucket_of(F.col("id")),
                         ~F.col("dhash").eqNullSafe(F.col("_new")),
                     )
@@ -222,10 +225,16 @@ class MediaDedupIndexState(VersionedState):
             )
             if probe_rows:
                 # retraction leg: counts only change through buckets
-                # the batch touches, so the delta stays batch-sized
-                by_id = {r[0]: r[:3] for r in probe_rows}
-                touched_state = local_relation(
-                    self.spark, [by_id[i] for i in sorted(by_id)], _SIG_SCHEMA
+                # the batch touches, so the delta stays batch-sized; the
+                # touched ids' old signatures are read from their own
+                # state buckets only
+                touched_state = with_ids(
+                    self._read_buckets(
+                        "signatures", _SIG_SCHEMA,
+                        sorted({r[1] for r in probe_rows}),
+                    ),
+                    sorted(r[0] for r in probe_rows),
+                    "id",
                 )
                 delta = (
                     batch_counts.unionByName(
@@ -266,8 +275,8 @@ class MediaDedupIndexState(VersionedState):
                 .unionByName(updated)
                 .localCheckpoint()
             )
-        overlap_ids = sorted({r[0] for r in probe_rows})
-        changed_ids = sorted({r[0] for r in probe_rows if r[4]})
+        overlap_ids = sorted(r[0] for r in probe_rows)
+        changed_ids = sorted(r[0] for r in probe_rows if r[2])
         if not first:
             # the probe join's state side: a PLAN over the state
             # parquet + the batch checkpoint — never materialized (r12;
@@ -308,7 +317,7 @@ class MediaDedupIndexState(VersionedState):
             rb_pairs: list[int] | None = None if first else []
             sig_data, pair_data = batch_sigs, new_pairs
         else:
-            rb_ids = sorted({r[3] for r in probe_rows})
+            rb_ids = sorted({r[1] for r in probe_rows})
             sig_data = without_ids(
                 self._read_buckets("signatures", _SIG_SCHEMA, rb_ids),
                 overlap_ids, ("id",),
@@ -410,7 +419,7 @@ class MediaDedupIndexState(VersionedState):
         )
         if not gone:
             return
-        gone_sigs = self.signatures().where(F.col("id").isin(gone))
+        gone_sigs = with_ids(self.signatures(), gone, "id")
         gone_counts = band_bucket_counts(
             gone_sigs, self.band_bytes, self.n_blocks
         ).localCheckpoint()
@@ -434,10 +443,9 @@ class MediaDedupIndexState(VersionedState):
         )
         # bucketed retraction: only the buckets holding a deleted id's
         # rows are rewritten; the rest hardlink (``_write_bucketed``)
-        rb_ids = sorted({
-            r[0]
-            for r in gone_sigs.select(self._bucket_of(F.col("id"))).collect()
-        })
+        rb_ids = touching_buckets(
+            self._bucket_of, gone, self.signatures(), cols=("id",), key="id"
+        )
         old_pairs = self.pairs()
         rb_pairs = touching_buckets(self._bucket_of, gone, old_pairs)
         sig_data = without_ids(

@@ -32,7 +32,7 @@ import shutil
 import warnings
 from collections.abc import Callable, Mapping
 from concurrent.futures import ThreadPoolExecutor
-from functools import partial, reduce
+from functools import partial
 from typing import Any, NamedTuple
 
 from pyspark import SparkContext
@@ -104,34 +104,6 @@ class Bucketed(NamedTuple):
     data: DataFrame
     key: str
     rewrite_buckets: list[int] | None
-
-
-def without_ids(
-    df: DataFrame, ids: list, cols: tuple[str, ...] = ("lid", "rid")
-) -> DataFrame:
-    """``df`` minus every row whose ``cols`` hold one of the driver-side
-    ``ids`` — by default a pair log minus every pair touching them (the
-    retraction of a dedup fold).  A literal filter, no join."""
-    if not ids:
-        return df
-    keep = ~F.col(cols[0]).isin(ids)
-    for c in cols[1:]:
-        keep = keep & ~F.col(c).isin(ids)
-    return df.where(keep)
-
-
-def touching_buckets(
-    bucket_of: Callable[["F.Column"], "F.Column"],
-    ids: list,
-    *pair_logs: DataFrame,
-) -> list[int]:
-    """The lid-buckets of every pair in ``pair_logs`` that touches one
-    of ``ids`` — the pair-log buckets a dedup fold must rewrite.  One
-    collect with no exchange: the id list is a literal filter and the
-    buckets are deduplicated on the driver."""
-    touch = F.col("lid").isin(ids) | F.col("rid").isin(ids)
-    scans = [p.where(touch).select(bucket_of(F.col("lid"))) for p in pair_logs]
-    return sorted({r[0] for r in reduce(DataFrame.union, scans).collect()})
 
 
 class VersionedState:

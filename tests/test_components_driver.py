@@ -3,9 +3,13 @@ distributed star contraction it stands in for: with the edge bound
 forced to 0 every call takes the distributed path, so the two must give
 bit-identical mappings — on random graphs, at the bound's edge, in both
 cases of the incremental fold, and through whole dedup and media folds,
-where the driver path must also submit strictly fewer Spark jobs."""
+where the driver path must also submit strictly fewer Spark jobs.  The
+whole folds also run with every id-set filter as a broadcast join
+(``LITERAL_IDS_MAX`` forced to 0) and must give the same state."""
 
 from __future__ import annotations
+
+import itertools
 
 import numpy as np
 import pytest
@@ -13,6 +17,7 @@ from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
 from nomenklatura_spark.multimodal.decode import encode_bmp, encode_ppm
+from nomenklatura_spark.operators import id_sets
 from nomenklatura_spark.resolver import components
 from nomenklatura_spark.resolver.components import (
     connected_components,
@@ -224,13 +229,18 @@ ASSETS = [
 ]
 
 
-def _fold_all(spark, state, batches, make_df):
+_GROUPS = itertools.count()  # job-group names are never reused in a session
+
+
+def _fold_all(spark, state, batches, make_df, gone):
+    """Fold ``batches``, then delete ``gone``; the Spark jobs submitted."""
     sc = spark.sparkContext
-    group = f"fold-{id(state)}"
+    group = f"fold-{next(_GROUPS)}"
     sc.setJobGroup(group, "fold guard")
     try:
         for rows in batches:
             state.apply_batch(make_df(rows))
+        state.delete(gone)
     finally:
         for k in ("spark.jobGroup.id", "spark.job.description"):
             sc.setLocalProperty(k, None)
@@ -244,6 +254,7 @@ def test_fold_state_identical_and_fewer_jobs(spark, monkeypatch, tmp_path, kind)
         new_state = lambda d: DedupIndexState(spark, d, threshold=0.3)  # noqa: E731
         batches = DOCS
         make_df = lambda rows: spark.createDataFrame(rows, DOC_SCHEMA)  # noqa: E731
+        gone = spark.createDataFrame([("a1",)], "doc_id string")
     else:
         rels = ("signatures", "pairs", "components", "band_counts")
         new_state = lambda d: MediaDedupIndexState(spark, d)  # noqa: E731
@@ -251,15 +262,20 @@ def test_fold_state_identical_and_fewer_jobs(spark, monkeypatch, tmp_path, kind)
         make_df = lambda rows: spark.createDataFrame(  # noqa: E731
             [(i, bytearray(p)) for i, p in rows], "asset_id long, payload binary"
         )
+        gone = spark.createDataFrame([(1,)], "asset_id long")
     driver = new_state(str(tmp_path / "driver"))
-    jobs_driver = _fold_all(spark, driver, batches, make_df)
+    jobs_driver = _fold_all(spark, driver, batches, make_df, gone)
     with monkeypatch.context() as m:
         m.setattr(components, "DRIVER_CC_MAX_EDGES", 0)
         dist = new_state(str(tmp_path / "distributed"))
-        jobs_dist = _fold_all(spark, dist, batches, make_df)
+        jobs_dist = _fold_all(spark, dist, batches, make_df, gone)
+    with monkeypatch.context() as m:
+        m.setattr(id_sets, "LITERAL_IDS_MAX", 0)
+        joins = new_state(str(tmp_path / "joins"))
+        _fold_all(spark, joins, batches, make_df, gone)
     for rel in rels:
         a = sorted(map(tuple, getattr(driver, rel)().collect()))
-        b = sorted(map(tuple, getattr(dist, rel)().collect()))
-        assert a == b, rel
+        assert a == sorted(map(tuple, getattr(dist, rel)().collect())), rel
+        assert a == sorted(map(tuple, getattr(joins, rel)().collect())), rel
     assert len(sorted(driver.components().collect())) > 0
     assert jobs_driver < jobs_dist, (jobs_driver, jobs_dist)
