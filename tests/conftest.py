@@ -12,7 +12,14 @@ SF_SMOKE = os.environ.get("TEST_SF_DIR", "/root/testdata/sf0.001")
 
 @pytest.fixture(scope="session")
 def spark():
-    spark = get_spark("nomenklatura-spark-tests", cpus=4, shuffle_partitions=4)
+    # local[N] runs every executor thread inside the driver JVM, and the
+    # package default (32g) lets the suite's heap outgrow a 15 GB machine
+    # until the kernel kills the JVM mid-run; 6g runs the whole suite
+    memory = os.environ.get("SPARK_DRIVER_MEMORY", "6g")
+    spark = get_spark(
+        "nomenklatura-spark-tests", cpus=4, shuffle_partitions=4,
+        extra_conf={"spark.driver.memory": memory},
+    )
     yield spark
 
 
