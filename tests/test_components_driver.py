@@ -233,7 +233,9 @@ _GROUPS = itertools.count()  # job-group names are never reused in a session
 
 
 def _fold_all(spark, state, batches, make_df, gone):
-    """Fold ``batches``, then delete ``gone``; the Spark jobs submitted."""
+    """Fold ``batches``, then delete ``gone``; the Spark jobs submitted.
+    The status tracker is filled by the listener bus on its own thread,
+    so the bus is drained first or the last jobs may not be counted."""
     sc = spark.sparkContext
     group = f"fold-{next(_GROUPS)}"
     sc.setJobGroup(group, "fold guard")
@@ -244,6 +246,7 @@ def _fold_all(spark, state, batches, make_df, gone):
     finally:
         for k in ("spark.jobGroup.id", "spark.job.description"):
             sc.setLocalProperty(k, None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
     return len(sc.statusTracker().getJobIdsForGroup(group))
 
 

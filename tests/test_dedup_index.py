@@ -354,8 +354,10 @@ def test_stale_band_rows_never_nominate_candidates(spark, tmp_path):
     est_jaccard(x, y_new) clears the threshold while x and y_new share
     NO band, and x shares a full band with y's RETIRED content — the
     exact configuration where only a stale band row can nominate."""
-    from nomenklatura_spark.dedup.minhash import minhash_signatures
-    from nomenklatura_spark.streaming.dedup_index import _bands_of
+    from nomenklatura_spark.dedup.minhash import (
+        banded_signatures,
+        minhash_signatures,
+    )
 
     X_TEXT = "w0 w1 w2 w3 w4 w5 w6 w7 w8 w9 w10 n114_11"
     Y_NEW = "w0 w1 w2 n116_3 w4 n116_5 w6 w7 w8 w9 n116_10 w11"
@@ -367,7 +369,8 @@ def test_stale_band_rows_never_nominate_candidates(spark, tmp_path):
             "doc_id", "text", 3, "word", 4,
         ).select(F.col("id").cast("string").alias("id"), "seed", "minhash")
         return {
-            (r["band"], r["band_key"]) for r in _bands_of(sigs, 2).collect()
+            (r["band"], r["band_key"])
+            for r in banded_signatures(sigs, 2).collect()
         }
 
     # fixture premises (guard against silent rot of the searched texts):

@@ -193,6 +193,21 @@ def test_delete_equals_scratch_over_remaining(spark, tmp_path):
             state.serve_keep_list().collect()}
     assert keep[1] is True and keep[11] is False and 13 not in keep
 
+    # redelivered delete (ids already gone): the version bumps once and
+    # no relation changes; an EMPTY delete does not bump at all
+    def _snapshot():
+        return [
+            sorted(map(tuple, rel().collect()))
+            for rel in (state.pairs, state.components, state.band_counts)
+        ]
+
+    before, v = _snapshot(), state.version()
+    state.delete(spark.createDataFrame([(2,), (12,)], "asset_id long"))
+    assert state.version() == v + 1
+    assert _snapshot() == before
+    state.delete(spark.createDataFrame([], "asset_id long"))
+    assert state.version() == v + 1
+
 
 def test_band_counts_maintained_and_batch_bounded_skew(spark, tmp_path):
     """The maintained band-bucket histogram equals a from-scratch
