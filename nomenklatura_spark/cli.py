@@ -20,8 +20,7 @@ the reference tool can drive the same workflows:
 - ``pagerank``           graph centrality over an edge parquet
 
 The interactive ``dedupe`` TUI and network ``enrich``/``match`` verbs are
-out of scope per SURVEY §2 (TUI) and the sandbox (HTTP transports are
-injection points; see sources/enrich.py).
+out of scope per SURVEY §2 (TUI) and for want of an HTTP transport.
 """
 
 from __future__ import annotations

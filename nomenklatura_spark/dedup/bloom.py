@@ -65,8 +65,7 @@ def sparse_bloom_words(
     """Sparse packed form ``(w int, v long)`` of the benchmark's Bloom
     filter: only the non-zero 64-bit words.  This is the MERGEABLE form —
     Bloom union is bitwise OR, so two sparse word sets combine with one
-    ``groupBy(w).agg(bit_or(v))``, which is what the incrementally
-    maintained index (streaming/bloom_index.py) stores."""
+    ``groupBy(w).agg(bit_or(v))``."""
     spark = bench.sparkSession
     seeds = spark.range(n_hashes).select(F.col("id").cast("int").alias("seed"))
     sh = (

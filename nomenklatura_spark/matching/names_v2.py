@@ -32,9 +32,10 @@ calibrated against the reference's own frozen per-case output
 - **residue alignment**: order-aware DP with part clustering — a merged
   cluster scores ``1 - (damerau + 0.2·joins)/len`` (the join cost
   reproduces the frozen run: "Plat Ono Vich"~"Platonovich" → 0.969),
-  a 1-1 pair scores the LCS-distance kernel ``residue_fuzzy``
-  (``(1-d/L)^e``, d = L - LCS, e = 2 for equal lengths else 1 —
-  fitted per-case to the frozen run, see ``tools/fit_kernel.py``),
+  a 1-1 pair scores the kernel ``residue_fuzzy`` (``(1-d/L)^e``, d the
+  confusable-weighted Levenshtein, min'd with L - LCS for equal
+  lengths, e = 2 for equal lengths else 1 — fitted per-case to the
+  frozen run, pinned by ``tests/test_parity_corpora.py``),
   no phonetic fallback (fitted out — see _cluster_score); persons reorder residues first
   (``align_person_name_order``), orgs keep order (so "C.B.A." vs
   "A.B.C." penalises, frozen 0.2308).
@@ -83,8 +84,9 @@ OBJ_SCHEMAS = frozenset({"Vessel", "Airplane", "Security"})
 _STOP = frozenset(STOP_TOKENS) | {"a", "an", "et", "in", "on", "at", "by", "to"}
 
 # Alignment-policy constants, fitted against the reference's frozen run
-# by tools/fit_alignment.py (corpus mean |Δ| 0.025, 93% of cases within
-# 0.1).  Decoded semantics:
+# (corpus mean |Δ| 0.025, 93% of cases within 0.1; pinned by
+# tests/test_parity_corpora.py against tests/data/logicv2_frozen.csv).
+# Decoded semantics:
 # - equal single-token pairs are weightless only for org-style
 #   conjunction stopwords ("Government of Estonia"~"... Ethiopia" has
 #   "of"~"of" weightless) — person particles at full weight ("Bart De
@@ -97,21 +99,10 @@ _ORG_STOP = frozenset(
 )
 _STOP_EQ = _ORG_STOP  # equal single-token pairs in this set are weightless
 _STOP_DAMPEN = _ORG_STOP | {"a"}  # mismatched pairs w/ one side here dampen 0.7
-SINGLE_LETTER_DAMPEN = False  # initial-vs-word aligned pairs dampen 0.7
 # aligned pair of two DIFFERENT location tokens (Santander México ~
 # Santander Chile) carries the reference's LOCATION weight 0.8 —
 # corpus-neutral vs 1.0 but matches the reference's weighting scheme
 LOC_MISMATCH_WEIGHT = 0.8
-# Residue kernel distance ("wlev", the fitted winner): confusable-class
-# weighted levenshtein (``_wlev``), min'd with the LCS distance for
-# equal lengths ("frederick"~"friedrich" 0.605 = (7/9)² needs the LCS
-# view; "abdurrahim"~"abdurrahman" lev 3 > 11/4 → 0 needs the lev
-# view), exponent 2 for equal lengths else 1, gates d ≤ L/4 and
-# (L ≥ 5 or d < 1) — the sub-integer escape admits short
-# discounted-substitution pairs ("mosk"~"musk" 0.6806) while length-4
-# full-cost pairs stay at 0 ("cock"~"cook").  "hybrid" and "lcs" are
-# the earlier fits, kept for tools/fit_alignment.py comparisons.
-KERNEL_MODE = "wlev"
 
 _SPLIT_RE = re.compile(r"[^0-9a-zÀ-ɏЀ-ӿ]+")
 
@@ -216,11 +207,14 @@ def _wlev(a: str, b: str) -> float:
 
 def residue_fuzzy(left: str, right: str) -> float:
     """1-1 residue-pair kernel, fitted per-case to the frozen reference
-    run (tools/fit_kernel.py, tools/fit_alignment.py): ``(1 - d/L)^e``
-    with ``e = 2`` for equal lengths (substitution-shaped edits) else 1,
-    and ``d`` per ``KERNEL_MODE`` — the default "wlev" uses the
-    confusable-class weighted levenshtein (min'd with the LCS distance
-    for equal lengths) with gates ``d <= L/4`` and ``L >= 5 or d < 1``.
+    run (pinned by tests/test_parity_corpora.py against
+    tests/data/logicv2_frozen.csv): ``(1 - d/L)^e`` with ``e = 2`` for
+    equal lengths (substitution-shaped edits) else 1, and ``d`` the
+    confusable-class weighted levenshtein (``_wlev``), min'd with the
+    LCS distance for equal lengths, with gates ``d <= L/4`` and
+    ``L >= 5 or d < 1``.  The sub-integer escape admits short
+    discounted-substitution pairs while length-4 full-cost pairs stay
+    at 0.
 
     Decoded from frozen anchors: "Putin"~"Pudin" 0.64 = (4/5)^2,
     "Mertz"~"Merz" 0.8 = (4/5)^1, "Mosk"~"Musk" 0.6806 = (1-0.7/4)^2,
@@ -232,26 +226,15 @@ def residue_fuzzy(left: str, right: str) -> float:
         return 1.0
     l1, l2 = len(left), len(right)
     max_len = max(l1, l2)
-    if KERNEL_MODE == "wlev":
-        if l1 == l2:
-            d = min(float(max_len - _lcs_len(left, right)), _wlev(left, right))
-        else:
-            d = _wlev(left, right)
-        if max_len < 5 and d >= 1:
-            return 0.0
-        # absolute cap 2: no frozen anchor accepts a 3-edit pair at any
-        # length ("maroghashvili"~"margoshvili", lev 3 at L=13, scores 0)
-        if d > min(max_len / 4, _MAX_EDITS):
-            return 0.0
-        exp = 2 if l1 == l2 else 1
-        return (1 - d / max_len) ** exp
-    if max_len < 5:
-        return 0.0
-    if KERNEL_MODE == "hybrid" and l1 != l2:
-        d = levenshtein(left, right)
+    if l1 == l2:
+        d = min(float(max_len - _lcs_len(left, right)), _wlev(left, right))
     else:
-        d = max_len - _lcs_len(left, right)
-    if d > max_len // 4:
+        d = _wlev(left, right)
+    if max_len < 5 and d >= 1:
+        return 0.0
+    # absolute cap 2: no frozen anchor accepts a 3-edit pair at any
+    # length ("maroghashvili"~"margoshvili", lev 3 at L=13, scores 0)
+    if d > min(max_len / 4, _MAX_EDITS):
         return 0.0
     exp = 2 if l1 == l2 else 1
     return (1 - d / max_len) ** exp
@@ -854,14 +837,6 @@ def _alignment_score(
             if (len(qparts) == 1 and qparts[0] in _STOP_DAMPEN) or (
                 len(rparts) == 1 and rparts[0] in _STOP_DAMPEN
             ):
-                weight *= STOPWORD_DAMPEN
-            elif SINGLE_LETTER_DAMPEN and (
-                (len(qparts) == 1 and len(qparts[0]) == 1)
-                != (len(rparts) == 1 and len(rparts[0]) == 1)
-            ):
-                # initial-vs-word aligned pairs carry reduced weight
-                # ("A. Nazarbayev"~"Nursultan Nazarbayev" = 1/1.7 frozen,
-                # with no letter relationship between the parts)
                 weight *= STOPWORD_DAMPEN
             if any(p in family for p in qparts + rparts):
                 weight *= FAMILY_NAME_WEIGHT

@@ -103,7 +103,7 @@ _SYMBOL_GROUPS: dict[str, list[str]] = {
     # "solutions" / "development" / "engineering" are ordinary literals
     # there ("Bowne Global Solutions ..." pairs at full weight), while
     # "general" / "trust" / "capital" / "partners" ARE down-weighted
-    # symbols (ablation in tools/fit_alignment.py history).
+    # symbols (per-token ablation against the frozen run).
     "company": ["company", "co", "corp", "corporation", "cia", "cie",
                 "kompaniya"],
     "foundation": ["foundation", "stiftung", "fond", "fondation",

@@ -12,6 +12,12 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _default_driver_memory() -> str:
+    """Half the machine's physical memory, capped at 32g, in MiB."""
+    physical = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{min(32 * 1024, physical // 2 // 2**20)}m"
+
+
 def get_spark(
     app_name: str = "nomenklatura_spark",
     cpus: int | None = None,
@@ -46,9 +52,11 @@ def get_spark(
         # is the WHOLE memory budget: size it to the machine, not to a
         # driver-only default. 8g with 32 task threads + persisted blocker
         # relations produced visible GC degradation over a bench session
-        # (same query 3-6x slower late in the session, fast in a fresh one).
+        # (same query 3-6x slower late in the session, fast in a fresh one);
+        # a heap above physical memory gets the JVM killed instead.
         .config(
-            "spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "32g")
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEMORY") or _default_driver_memory(),
         )
     )
     for k, v in (extra_conf or {}).items():

@@ -166,9 +166,10 @@ class VersionedState:
         overwrite), a ``Bucketed`` (copy-on-write assembly, see
         ``_write_bucketed``) or a zero-argument callable that builds
         the DataFrame inside the pool — for a relation whose plan itself
-        runs Spark actions (the component folds).  A task lays down data
-        outside the ``rel/v{nv}`` layout (BM25's batch partition) or
-        probes a contract and raises.  Only when all of them succeeded
+        runs Spark actions (the component folds).  A task takes ``nv``
+        and runs writes that must happen one after another (the blocking
+        index writes ``tsc`` after ``entries``, reusing the batch cache
+        that write fills).  Only when all of them succeeded
         does the pointer swap to ``nv`` with ``(batch_id, scope)``;
         ``batch_id`` None keeps the stored batch and scope.  Any failure
         re-raises before the swap, so nothing commits — the orphaned
@@ -363,11 +364,9 @@ class VersionedState:
         size; a deployment runs this on a retention schedule.
 
         Only ``v{N}`` directories under the state's relation
-        subdirectories are touched — non-versioned layouts (the BM25
-        index's batch-partitioned postings root) hold live data for
-        EVERY version and are left alone.  The current version is
-        always kept (``keep_last`` is clamped to >= 1); reading a
-        vacuumed version afterwards fails loudly (the horizon moved).
+        subdirectories are touched.  The current version is always kept
+        (``keep_last`` is clamped to >= 1); reading a vacuumed version
+        afterwards fails loudly (the horizon moved).
         Returns the removed directory paths."""
         import shutil
 

@@ -15,9 +15,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from nomenklatura_spark.multimodal.decode import encode_bmp
-from nomenklatura_spark.streaming.ann_index import VectorIndexState
-from nomenklatura_spark.streaming.bloom_index import BloomIndexState
-from nomenklatura_spark.streaming.bm25_index import Bm25IndexState
 from nomenklatura_spark.streaming.counts_index import CountsIndexState
 from nomenklatura_spark.streaming.dedup_index import DedupIndexState
 from nomenklatura_spark.streaming.funnel_index import FunnelIndexState
@@ -73,27 +70,9 @@ def _hist(spark, d):
     return state
 
 
-def _ivf(spark, d):
-    state = VectorIndexState(spark, d)
-    state.bootstrap(
-        _vectors(spark, [(1, [1.0, 0.1]), (2, [0.1, 1.0])]),
-        codebook=spark.createDataFrame(
-            [(0, [1.0, 0.0]), (1, [0.0, 1.0])],
-            "centroid int, c_vec array<double>",
-        ),
-    )
-    return state
-
-
-def _vectors(spark, rows):
-    return spark.createDataFrame(rows, "vec_id bigint, embedding array<double>")
-
-
 # (state factory, batch maker, fold kwargs) for every maintained index
 STATES = {
     "vocab": (VocabIndexState, _docs, {}),
-    "bloom": (BloomIndexState, _docs, {}),
-    "bm25": (lambda s, d: Bm25IndexState(s, d, n_buckets=8), _docs, {}),
     "dedup": (DedupIndexState, _docs, {}),
     "sample": (
         lambda s, d: SampleIndexState(s, d, k=2), _docs,
@@ -129,7 +108,6 @@ STATES = {
         ),
         {},
     ),
-    "ivf": (_ivf, lambda s: _vectors(s, [(3, [0.9, 0.2])]), {}),
 }
 
 

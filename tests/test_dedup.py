@@ -57,19 +57,6 @@ def test_simhash_banding_complete_vs_bruteforce(spark, sf_dir):
     assert banded == brute
 
 
-def test_exact_dedup_keeps_one_per_hash(spark):
-    from nomenklatura_spark.dedup.exact import exact_dedup, exact_duplicate_groups
-
-    df = spark.createDataFrame(
-        [(1, "hello world"), (2, "hello world"), (3, "different")],
-        "id long, text string",
-    )
-    groups = exact_duplicate_groups(df, "id", "text").collect()
-    assert len(groups) == 1 and groups[0]["n_dups"] == 2 and groups[0]["canonical_id"] == 1
-    kept = {r["id"] for r in exact_dedup(df, "id", "text").collect()}
-    assert kept == {1, 3}
-
-
 def test_ngram_containment_directional(spark):
     """Containment is directional toward the benchmark: a corpus doc that
     embeds a whole benchmark item scores 1.0 on it regardless of how much

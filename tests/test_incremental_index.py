@@ -113,87 +113,3 @@ def test_streaming_maintenance(spark, tmp_path):
     assert _sorted(idx.tsc(), TSC_COLS) == _sorted(
         token_schema_counts(scratch), TSC_COLS
     )
-
-
-def test_vector_index_incremental_matches_scratch(spark, tmp_path):
-    """IVF state folded batch-by-batch equals a from-scratch assignment
-    of the final corpus against the same frozen codebook, and querying
-    the maintained cells gives the same top-k as the batch operator."""
-    from nomenklatura_spark.ann.ivf import ivf_assign, ivf_topk
-    from nomenklatura_spark.session import load_table
-    from nomenklatura_spark.streaming.ann_index import VectorIndexState
-
-    emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
-    base = emb.where(F.col("vec_id") % 3 != 0)
-    batch = emb.where(F.col("vec_id") % 3 == 0)
-
-    idx = VectorIndexState(spark, str(tmp_path / "vstate"))
-    idx.bootstrap(base, n_centroids=4, n_iter=1)
-    assert idx.version() == 0
-    idx.apply_batch(batch)
-    assert idx.version() == 1
-
-    cb = idx.codebook()
-    scratch = ivf_assign(emb, cb)
-    got = sorted((r["centroid"], r["id"]) for r in idx.cells().collect())
-    want = sorted((r["centroid"], r["id"]) for r in scratch.collect())
-    assert got == want
-
-    # upsert semantics: re-applying a subset changes nothing
-    idx.apply_batch(batch.limit(5))
-    got2 = sorted((r["centroid"], r["id"]) for r in idx.cells().collect())
-    assert got2 == want
-
-    # retraction removes exactly the ids
-    drop = batch.select(F.col("vec_id").alias("id")).limit(3)
-    drop_ids = {r["id"] for r in drop.collect()}
-    idx.retract(drop)
-    left = {r["id"] for r in idx.cells().collect()}
-    assert left == {w[1] for w in want} - drop_ids
-
-    # querying the maintained state == the batch operator with the same
-    # pre-trained codebook over the same corpus
-    queries = emb.where(F.col("vec_id") % 50 == 0)
-    corpus_back = idx.cells().select(
-        F.col("id").alias("vec_id"), F.col("vec").alias("embedding")
-    )
-    remaining = emb.join(
-        spark.createDataFrame([(i,) for i in drop_ids], "vec_id bigint"),
-        "vec_id",
-        "left_anti",
-    )
-    a = ivf_topk(corpus_back, queries, k=3, n_probe=2, centroids=cb)
-    b = ivf_topk(remaining, queries, k=3, n_probe=2, centroids=cb)
-    ra = {(r["query_id"], r["rank"]): r["neighbor_id"] for r in a.collect()}
-    rb = {(r["query_id"], r["rank"]): r["neighbor_id"] for r in b.collect()}
-    assert ra == rb
-
-
-def test_maintain_vector_stream(spark, tmp_path):
-    """The Structured-Streaming driver folds file-source micro-batches
-    into the vector index."""
-    from nomenklatura_spark.session import load_table
-    from nomenklatura_spark.streaming.ann_index import VectorIndexState
-
-    emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
-    base = emb.where(F.col("vec_id") % 3 != 0)
-    batch = emb.where(F.col("vec_id") % 3 == 0)
-
-    src = str(tmp_path / "src")
-    batch.withColumn(
-        "embedding", F.col("embedding").cast("array<double>")
-    ).write.mode("overwrite").parquet(src)
-
-    idx = VectorIndexState(spark, str(tmp_path / "vstate2"))
-    idx.bootstrap(base, n_centroids=4, n_iter=1)
-
-    stream = spark.readStream.schema(
-        "vec_id bigint, embedding array<double>"
-    ).parquet(src)
-    q = maintain_stream(
-        stream, idx, str(tmp_path / "ckpt"), trigger_once=True
-    )
-    q.awaitTermination(120)
-    assert idx.version() >= 1
-    n_total = emb.count()
-    assert idx.cells().count() == n_total

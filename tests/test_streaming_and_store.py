@@ -1,14 +1,9 @@
-"""Streaming (P4, windowed aggs, sessionization) and versioned-store (S6)
+"""Streaming (windowed aggs, sessionization) and versioned-store (S6)
 tests."""
 
 from __future__ import annotations
 
-import os
-
-import pytest
 from pyspark.sql import functions as F
-
-DONATIONS = "/root/reference/tests/fixtures/donations.ijson"
 
 
 def test_windowed_event_counts_batch_equals_sql(spark, sf_dir, duck):
@@ -44,44 +39,6 @@ def test_sessionize_batch(spark, sf_dir):
     assert total == events.count()
     # every session spans >= its events' gap constraint (start <= end)
     assert all(r["session_start"] <= r["session_end"] for r in rows)
-
-
-@pytest.mark.skipif(not os.path.exists(DONATIONS), reason="fixture missing")
-def test_streaming_apply(spark, tmp_path):
-    """P4 — stream entity files through the linker with foreachBatch."""
-    import shutil
-
-    from nomenklatura_spark.streaming.apply import apply_stream, stream_entity_files
-
-    src_dir = tmp_path / "in"
-    src_dir.mkdir()
-    shutil.copy(DONATIONS, src_dir / "donations.json")
-
-    stream = stream_entity_files(spark, str(src_dir), dataset="donations")
-    assert stream.isStreaming
-
-    def mapping_provider(s):
-        return s.createDataFrame(
-            [("f9c295f21b233ac878fbac4d271bb6fd13d7952a", "NK-lina")],
-            "node string, canonical_id string",
-        )
-
-    out: list = []
-
-    def sink(df, batch_id):
-        out.append(df.groupBy("canonical_id").count().collect())
-
-    q = apply_stream(
-        stream,
-        mapping_provider,
-        sink,
-        checkpoint_dir=str(tmp_path / "ckpt"),
-        trigger_once=True,
-    )
-    q.awaitTermination(120)
-    assert out, "no micro-batch processed"
-    canon = {r["canonical_id"]: r["count"] for r in out[0]}
-    assert "NK-lina" in canon  # the mapped entity was rewritten
 
 
 def test_versioned_store_carryover(spark, tmp_path):
